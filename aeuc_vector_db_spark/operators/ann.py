@@ -18,7 +18,13 @@ Three layers:
   every file.
 - ivf_search_batch — coarse scoring against the (tiny, broadcast)
   centroid table picks nprobe cells per query; the fine scan is an
-  ordinary exact batch k-NN over the pruned corpus.
+  ordinary exact batch k-NN over the pruned corpus. The SQL form, kept
+  as the oracle twin.
+- ivf_search_batch_arrow — the form to run: the coarse probe in NumPy
+  on the driver over the collected queries and centroids, then the
+  Arrow kernel over the partition-pruned scan with a per-query cell
+  mask, and one SinglePartition exchange into a single merge task (no
+  Window, no orderBy).
 - recall_at_k — evaluation against exact search (the accuracy/cost knob
   is nprobe; recall=1.0 when nprobe=k).
 
@@ -166,38 +172,41 @@ def fit_centroids_sample_local(
     return [(i, [float(x) for x in c]) for i, c in enumerate(cent)]
 
 
-def assign_centroids(
-    corpus: DataFrame,
-    centroids: DataFrame | list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Distributed nearest-centroid assignment: (id_col, centroid_id).
+def _local_centroids(centroids) -> "tuple[np.ndarray, np.ndarray]":
+    """(centroid ids, (k, d) float64 matrix), sorted by id, from the k-row
+    (centroid_id, centroid) DataFrame (one collect) or an already-local
+    [(centroid_id, vector)] list. A NULL centroid, or one whose length
+    is not the most common one, raises a ValueError naming it."""
+    from collections import Counter
 
-    Entirely map-side: the k-row centroid table is collected to a (k, d)
-    matrix and closed over an Arrow pandas_udf that computes the
-    squared-euclidean argmin per vector — NO shuffle, no join (the
-    earlier crossJoin+groupBy formulation exchanged N·k rows for an
-    aggregate a projection can do). Ties break to the lowest centroid id
-    (np.argmin returns the first minimum) — a total order, so corpus
-    partitioning is reproducible.
+    import numpy as np
 
-    `centroids` may be the k-row DataFrame or an already-local
-    [(centroid_id, vector)] list (fit_centroids_sample_local) — the
-    latter skips the collect job entirely.
-    """
+    if isinstance(centroids, DataFrame):
+        rows = [(r["centroid_id"], r["centroid"]) for r in centroids.collect()]
+    else:
+        rows = list(centroids)
+    if not rows:
+        raise ValueError("empty centroid set")
+    rows.sort(key=lambda t: t[0])
+    for cid, vec in rows:
+        if vec is None:
+            raise ValueError(f"centroid {cid!r}: NULL vector")
+    dim = Counter(len(v) for _, v in rows).most_common(1)[0][0]
+    for cid, vec in rows:
+        if len(vec) != dim:
+            raise ValueError(f"centroid {cid!r}: vector has dimension {len(vec)}, expected {dim}")
+    cids = np.array([c for c, _ in rows])
+    return cids, np.asarray([list(v) for _, v in rows], dtype=np.float64)
+
+
+def _nearest_centroid_udf(centroids):
+    """The Arrow pandas_udf ARRAY<DOUBLE> → INT behind assign_centroids:
+    the squared-euclidean argmin over the closed-over centroid matrix."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    if isinstance(centroids, DataFrame):
-        cent_iter = ((r["centroid_id"], list(r["centroid"])) for r in centroids.collect())
-    else:
-        cent_iter = ((cid, list(vec)) for cid, vec in centroids)
-    cent_rows = sorted(cent_iter, key=lambda t: t[0])
-    cids = np.array([c for c, _ in cent_rows])
-    cmat = np.asarray([v for _, v in cent_rows], dtype=np.float64)  # (k, d)
-
+    cids, cmat = _local_centroids(centroids)
     dim = cmat.shape[1]
 
     def _assign(v):
@@ -223,8 +232,30 @@ def assign_centroids(
         return pd.Series(out, dtype="Int64")
 
     _assign.__annotations__ = {"v": pd.Series, "return": pd.Series}
-    assign_udf = pandas_udf(_assign, "int")
+    return pandas_udf(_assign, "int")
 
+
+def assign_centroids(
+    corpus: DataFrame,
+    centroids: DataFrame | list[tuple[int, list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Distributed nearest-centroid assignment: (id_col, centroid_id).
+
+    Entirely map-side: the k-row centroid table is collected to a (k, d)
+    matrix and closed over an Arrow pandas_udf that computes the
+    squared-euclidean argmin per vector — NO shuffle, no join (the
+    earlier crossJoin+groupBy formulation exchanged N·k rows for an
+    aggregate a projection can do). Ties break to the lowest centroid id
+    (np.argmin returns the first minimum) — a total order, so corpus
+    partitioning is reproducible.
+
+    `centroids` may be the k-row DataFrame or an already-local
+    [(centroid_id, vector)] list (fit_centroids_sample_local) — the
+    latter skips the collect job entirely.
+    """
+    assign_udf = _nearest_centroid_udf(centroids)
     return corpus.select(
         F.col(id_col), assign_udf(as_double(vec_col)).alias("centroid_id")
     )
@@ -273,15 +304,18 @@ def ivf_append(
     IVF serves appends from frozen centroids and refits offline when
     recall degrades — the quantizer is versioned with the index).
     """
-    if assignments is None:
-        assignments = assign_centroids(
-            new_vectors, centroids, id_col=id_col, vec_col=vec_col
-        )
     from aeuc_vector_db_spark.sources.tables import write_partitioned
 
-    write_partitioned(
-        new_vectors.join(assignments, id_col), path, ["centroid_id"], mode="append"
-    )
+    if assignments is None:
+        # the cell is a projected column: the batch is evaluated once
+        # (a self-join on assign_centroids' output would run the batch,
+        # and any validation it carries, on both sides)
+        routed = new_vectors.withColumn(
+            "centroid_id", _nearest_centroid_udf(centroids)(as_double(vec_col))
+        )
+    else:
+        routed = new_vectors.join(assignments, id_col)
+    write_partitioned(routed, path, ["centroid_id"], mode="append")
 
 
 def read_pruned(spark, path: str, centroid_ids: list[int]) -> DataFrame:
@@ -401,29 +435,45 @@ def ivf_search_batch_arrow(
     queries × nprobe=4/64 cells at N=1M, while the Arrow FULL scan of
     all 1M rows took 4.7 s — pruning that drops into the interpreted
     path costs 10× more CPU than it saves IO. This composes the two
-    properly: the coarse probe's (query → cells) map is collected
-    (Q·nprobe ints), the scan is filtered to the UNION of probed cells
-    (PartitionFilters on ivf-partitioned storage — the IO win stands),
-    and the fine scan is the NumPy-matmul kernel with a per-query cell
-    mask, so each query still ranks exactly its own probed cells.
+    properly:
+    - the queries and the centroids are collected once each, and the
+      coarse probe runs on the driver in NumPy (`score_block`, the fine
+      scan's own scorer) with coarse_probe's order (score DESC,
+      centroid_id ASC) — k·Q scores need no Spark job;
+    - the scan is filtered to the UNION of probed cells
+      (PartitionFilters on ivf-partitioned storage — the IO win stands);
+    - the fine scan is knn_search_batch_arrow over the pruned scan,
+      handed the collected queries: the NumPy-matmul kernel with a
+      per-query cell mask, so each query still ranks exactly its own
+      probed cells, then one single-partition merge.
 
     Same results rank-for-rank as ivf_search_batch (scores differ in
     low-order bits, np.dot pairwise summation — the knn_search_batch
-    twin situation, pinned by test_ann.py).
+    twin situation, pinned by test_ann.py). `centroids` may also be
+    the local [(centroid_id, vector)] list fit_centroids_sample_local
+    returns. A NULL or wrong-dimension query or centroid raises a
+    ValueError naming it.
     """
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
+    import numpy as np
 
-    cell_rows = coarse_probe(
-        centroids, queries, nprobe, metric, query_id_col, query_vec_col
-    ).collect()
+    from aeuc_vector_db_spark.operators.search import (
+        collect_queries,
+        knn_search_batch_arrow,
+        score_block,
+    )
+
+    cids, cmat = _local_centroids(centroids)
+    qb = collect_queries(queries, query_id_col, query_vec_col, dim=cmat.shape[1])
+    scores = score_block(cmat, qb.mat, metric)  # (k, Q)
     query_cells: dict = {}
-    for r in cell_rows:
-        query_cells.setdefault(r[query_id_col], set()).add(r["centroid_id"])
+    for j, qid in enumerate(qb.ids):
+        best = cids[np.lexsort((cids, -scores[:, j]))[:nprobe]]
+        query_cells.setdefault(qid, set()).update(best.tolist())
     union = sorted({c for cs in query_cells.values() for c in cs})
     pruned = corpus_with_cells.filter(F.col("centroid_id").isin(union))
     return knn_search_batch_arrow(
         pruned,
-        queries,
+        qb,
         top_k=top_k,
         metric=metric,
         id_col=id_col,

@@ -21,12 +21,15 @@ Spark plan shape:
 
 from __future__ import annotations
 
-from typing import Sequence
+from collections import Counter
+from typing import NamedTuple, Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from aeuc_vector_db_spark.functions.similarity import (
+    _phi_scores_sequential,
     phi_weighted_pair_pandas,
     phi_weighted_pandas,
     similarity_col,
@@ -128,9 +131,98 @@ def knn_search_batch(
     )
 
 
+class QueryBatch(NamedTuple):
+    """A query set collected to the driver (`collect_queries`)."""
+
+    ids: list
+    mat: np.ndarray  # (Q, d) float64
+    id_type: str  # Spark SQL type of the ids, for result schemas
+
+
+def collect_queries(
+    queries: DataFrame,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_embedding",
+    dim: int | None = None,
+) -> QueryBatch:
+    """Collect a query DataFrame in one job and check every vector.
+
+    A NULL vector, or one whose length is not `dim` (default: the most
+    common length in the batch), raises a ValueError naming the query —
+    the kernels score a dense (Q, d) matrix and cannot skip a query the
+    way they skip a dirty corpus row."""
+    rows = queries.select(query_id_col, query_vec_col).collect()
+    if not rows:
+        raise ValueError("empty query set")
+    for qid, v in rows:
+        if v is None:
+            raise ValueError(f"query {qid!r}: NULL query vector")
+    if dim is None:
+        dim = Counter(len(v) for _, v in rows).most_common(1)[0][0]
+    for qid, v in rows:
+        if len(v) != dim:
+            raise ValueError(f"query {qid!r}: vector has dimension {len(v)}, expected {dim}")
+    return QueryBatch(
+        [qid for qid, _ in rows],
+        np.asarray([v for _, v in rows], dtype=np.float64),
+        queries.schema[query_id_col].dataType.simpleString(),
+    )
+
+
+def score_block(mat: np.ndarray, q_mat: np.ndarray, metric: str) -> np.ndarray:
+    """(B, d) block × (Q, d) queries → (B, Q) score matrix.
+
+    Shared by the Arrow fine scan (a corpus batch per call) and the IVF
+    coarse probe on the driver (the centroid matrix), so both rank
+    under the same arithmetic."""
+    if metric == "cosine":
+        dots = mat @ q_mat.T
+        denom = (
+            np.linalg.norm(mat, axis=1)[:, None] * np.linalg.norm(q_mat, axis=1)[None, :]
+            + 1e-12
+        )
+        return dots / denom
+    if metric == "dot":
+        return mat @ q_mat.T
+    if metric == "euclidean":
+        # direct differences per query — the ‖a‖²−2ab+‖b‖² expansion
+        # cancels catastrophically for near-identical vectors
+        out = np.empty((mat.shape[0], q_mat.shape[0]))
+        for j in range(q_mat.shape[0]):
+            diff = mat - q_mat[j]
+            out[:, j] = 1.0 / (1.0 + np.sqrt((diff * diff).sum(axis=1)))
+        return out
+    if metric == "phi_weighted":
+        out = np.empty((mat.shape[0], q_mat.shape[0]))
+        for j in range(q_mat.shape[0]):
+            out[:, j] = _phi_scores_sequential(mat, np.broadcast_to(q_mat[j], mat.shape))
+        return out
+    raise ValueError(f"Unknown metric {metric!r}")
+
+
+def _fit_to_cluster(df: DataFrame, width: int) -> DataFrame:
+    """`_ensure_parallel` in the other direction: narrow-coalesce a small
+    input to `width` kernel tasks.
+
+    A scan of many small files (an IVF layout after appends holds one
+    file per cell per write) runs one task per file, each paying a
+    Python-worker handshake to score a few hundred rows. When the input
+    is under one spark.sql.files.maxPartitionBytes split per core, a
+    coalesce (no shuffle) packs it onto `width` tasks; a scan with at
+    most `width` partitions keeps them (coalesce never widens), and a
+    large scan is left alone. The size is the optimizer's estimate —
+    for a file scan, the bytes of the whole relation before partition
+    pruning, so the rule errs towards leaving a scan as it is."""
+    spark = df.sparkSession
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() < split * width:
+        return df.coalesce(width)
+    return df
+
+
 def knn_search_batch_arrow(
     corpus: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | QueryBatch,
     top_k: int = 10,
     metric: str = "cosine",
     id_col: str = "vec_id",
@@ -150,67 +242,43 @@ def knn_search_batch_arrow(
     interpreted-HOF fine scan measured 10× slower than this kernel's
     full scan at N=1M, so pruning must not fall back to it).
 
-    The query set is collected to a (Q, d) matrix (small by construction)
-    and closed over; the corpus is scanned ONCE as Arrow batches via
-    mapInPandas, scored with NumPy matrix math, and reduced to a
-    per-partition top-k heap per query — only k·Q rows leave each
-    partition, then a final window picks the global top-k. Compare
-    knn_search_batch (SQL expression path): same results rank-for-rank,
-    but the crossJoin ships (embedding, query) pairs and the higher-order
-    functions evaluate interpreted — measured ~8 s vs ~0.5 s for
-    2M pair-scores at N=100k. The SQL path remains the oracle-pinned
-    form (sequential fold bit-parity); this one uses np.dot (pairwise
-    summation — scores differ in low-order bits but ranks agree, see
-    tests/test_search_arrow.py).
+    `queries` is a DataFrame, collected here to a (Q, d) matrix (small
+    by construction), or a QueryBatch a caller already collected. The
+    matrix is closed over; the corpus is scanned ONCE as Arrow batches
+    via mapInPandas, scored with NumPy matrix math, and reduced to a
+    per-partition top-k per query — only k·Q rows leave each
+    partition. One SinglePartition exchange brings them to a single
+    merge task that ranks each query's candidates by (score DESC, id
+    ASC) and emits them in (query_id, rank) order: no Window, no
+    orderBy. The kernel stage is as wide as the cluster: an
+    under-parallel scan is spread to `min_partitions`, and a small
+    scan of many files is narrowed to defaultParallelism.
+
+    Compare knn_search_batch (SQL expression path): same results
+    rank-for-rank, but the crossJoin ships (embedding, query) pairs and
+    the higher-order functions evaluate interpreted — measured ~8 s vs
+    ~0.5 s for 2M pair-scores at N=100k. The SQL path remains the
+    oracle-pinned form (sequential fold bit-parity); this one uses
+    np.dot (pairwise summation — scores differ in low-order bits but
+    ranks agree, see tests/test_search_arrow.py).
 
     Returns (query_id, id, score, rank) like knn_search_batch.
     """
     from typing import Iterator
 
-    import numpy as np
     import pandas as pd
 
-    from aeuc_vector_db_spark.functions.similarity import _phi_scores_sequential
-
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    if not q_rows:
-        raise ValueError("empty query set")
-    q_ids = [r[query_id_col] for r in q_rows]
-    q_mat = np.asarray([list(r[query_vec_col]) for r in q_rows], dtype=np.float64)
-
-    def score_block(mat: np.ndarray) -> np.ndarray:
-        """(B, d) corpus block → (B, Q) score matrix."""
-        if metric == "cosine":
-            dots = mat @ q_mat.T
-            denom = (
-                np.linalg.norm(mat, axis=1)[:, None] * np.linalg.norm(q_mat, axis=1)[None, :]
-                + 1e-12
-            )
-            return dots / denom
-        if metric == "dot":
-            return mat @ q_mat.T
-        if metric == "euclidean":
-            # direct differences per query — the ‖a‖²−2ab+‖b‖² expansion
-            # cancels catastrophically for near-identical vectors
-            out = np.empty((mat.shape[0], q_mat.shape[0]))
-            for j in range(q_mat.shape[0]):
-                diff = mat - q_mat[j]
-                out[:, j] = 1.0 / (1.0 + np.sqrt((diff * diff).sum(axis=1)))
-            return out
-        if metric == "phi_weighted":
-            out = np.empty((mat.shape[0], q_mat.shape[0]))
-            for j in range(q_mat.shape[0]):
-                out[:, j] = _phi_scores_sequential(
-                    mat, np.broadcast_to(q_mat[j], mat.shape)
-                )
-            return out
-        raise ValueError(f"Unknown metric {metric!r}")
+    qb = (
+        queries
+        if isinstance(queries, QueryBatch)
+        else collect_queries(queries, query_id_col, query_vec_col)
+    )
+    q_ids, q_mat = qb.ids, qb.mat
 
     # id column types follow the inputs — string iglyph ids work the same
     # as long vec_ids (the id never enters the arithmetic, only the sort)
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
     id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {qid_type}, {id_col} {id_type}, score double"
+    out_schema = f"{query_id_col} {qb.id_type}, {id_col} {id_type}, score double"
 
     allowed_cells = (
         {qid: np.asarray(sorted(cs)) for qid, cs in query_cells.items()}
@@ -245,7 +313,7 @@ def knn_search_batch_arrow(
             # (lexsort-able), where pandas .to_numpy() would yield object
             ids = np.asarray(ids_py)
             mat = np.asarray(vec_list, dtype=np.float64)
-            scores = score_block(mat)  # (B, Q)
+            scores = score_block(mat, q_mat, metric)  # (B, Q)
             cells_arr = (
                 pdf[cell_col].to_numpy() if allowed_cells is not None else None
             )
@@ -280,15 +348,26 @@ def knn_search_batch_arrow(
             rows.extend((qid, vid, s) for s, vid in cand[:top_k])
         yield pd.DataFrame(rows, columns=[query_id_col, id_col, "score"])
 
+    def merge_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the single merge task: every partition's candidates, ranked
+        # per query by (score DESC, id ASC), in (query_id, rank) order
+        parts = [pdf for pdf in batches if len(pdf)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True).sort_values(
+            [query_id_col, "score", id_col], ascending=[True, False, True],
+            kind="mergesort",
+        )
+        pdf["rank"] = pdf.groupby(query_id_col, sort=False).cumcount() + 1
+        yield pdf[pdf["rank"] <= top_k]
+
     corpus = _ensure_parallel(corpus, min_partitions)
+    corpus = _fit_to_cluster(
+        corpus, max(corpus.sparkSession.sparkContext.defaultParallelism, min_partitions or 0)
+    )
     proj = [id_col, vec_col] + ([cell_col] if allowed_cells is not None else [])
     partial = corpus.select(*proj).mapInPandas(partition_topk, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.lit(top_k))
-        .orderBy(query_id_col, "rank")
-    )
+    return partial.repartition(1).mapInPandas(merge_topk, f"{out_schema}, rank int")
 
 
 def search_pglyphs(

@@ -323,28 +323,6 @@ def winnow_batch(texts: "pd.Series", k: int = 3, w: int = 4) -> "pd.DataFrame":
     return out
 
 
-def winnow_stats_pandas(k: int = 3, w: int = 4):
-    """Arrow-batched pandas_udf over `winnow_batch` — the column-form
-    twin (struct<n_fp, fp_sum, fp_min>, null struct fields for docs
-    with no shingles). The declared query uses mapInPandas instead
-    (one kernel pass; a filter over this UDF's output re-evaluates the
-    UDF on both sides of the filter — two ArrowEvalPython nodes,
-    measured 2× the cost)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType([
-        StructField("n_fp", LongType()),
-        StructField("fp_sum", LongType()),
-        StructField("fp_min", LongType()),
-    ])
-
-    @F.pandas_udf(schema)
-    def f(texts: pd.Series) -> pd.DataFrame:
-        return winnow_batch(texts, k, w)
-
-    return f
-
-
 def minhash_signature_col(hash_set: Column, k: int = 8) -> Column:
     """k-element MinHash signature: min over the set of (aᵢ·h + bᵢ) mod m.
 

@@ -113,10 +113,6 @@ def _fdct(block: np.ndarray) -> np.ndarray:
     return _C @ block @ _C.T
 
 
-def _idct(coeffs: np.ndarray) -> np.ndarray:
-    return _C.T @ coeffs @ _C
-
-
 def _canonical_codes(bits: list[int], vals: list[int]):
     """(code, length) per symbol in canonical Huffman order (T.81 C.2)."""
     out = {}
@@ -402,10 +398,6 @@ def _split_destuff(data: bytes) -> list[bytes]:
             parts.append(data[start:j])
             segs.append(b"".join(parts))
             return segs
-
-
-def _extend(v: int, t: int) -> int:
-    return v - (1 << t) + 1 if v < (1 << (t - 1)) else v
 
 
 def _parse_jpeg(payload: bytes):

@@ -92,14 +92,6 @@ def _schema_sig(df: DataFrame) -> list[str]:
     return [f"{f.name}:{f.dataType.simpleString()}" for f in df.schema.fields]
 
 
-def _sig_is_additive(old_sig: list[str], new_sig: list[str]) -> bool:
-    """Is new_sig an ADDITIVE evolution of old_sig — every existing
-    column kept with its exact type, new columns only appended? The
-    safest schema change under mixed-file reads: an explicit-schema
-    parquet read fills the appended columns with NULL for old files."""
-    return len(new_sig) >= len(old_sig) and new_sig[: len(old_sig)] == old_sig
-
-
 #: Safe numeric type WIDENINGS (old simpleString → allowed new ones):
 #: every old value is exactly representable in the new type, and
 #: Spark's parquet readers (vectorized and row-based, verified on 4.1)

@@ -131,12 +131,6 @@ def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFram
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every fixture table as a temp view for the SQL entry point."""
-    for t in TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,

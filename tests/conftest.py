@@ -1,5 +1,7 @@
 import os
+import shutil
 import sys
+import tempfile
 
 import pytest
 
@@ -15,9 +17,40 @@ SF01_DIR = "/root/testdata/sf0.01"
 def spark():
     from aeuc_vector_db_spark.session import get_spark
 
+    # a per-session warehouse: tables a killed run left behind in the
+    # default ./spark-warehouse would make the next run's saveAsTable fail
+    warehouse = tempfile.mkdtemp(prefix="aeuc-tests-warehouse-")
     s = get_spark(app_name="aeuc-tests", cpus=8, shuffle_partitions=8,
-                  extra_conf={"spark.driver.memory": "16g"})
+                  extra_conf={"spark.driver.memory": "16g",
+                              "spark.sql.warehouse.dir": warehouse})
     yield s
+    shutil.rmtree(warehouse, ignore_errors=True)
+
+
+@pytest.fixture(scope="session")
+def job_group(spark):
+    """`run(group, action)` runs `action` under its own Spark job group
+    and returns (job ids, StageInfo of every stage those jobs ran), read
+    from the status tracker once the listener bus has drained."""
+    sc = spark.sparkContext
+
+    def run(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = list(tracker.getJobIdsForGroup(group))
+        stages = [
+            tracker.getStageInfo(sid)
+            for j in jobs
+            for sid in tracker.getJobInfo(j).stageIds
+        ]
+        return jobs, [s for s in stages if s is not None]
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -239,6 +239,85 @@ def test_ivf_arrow_matches_sql_path_rank_for_rank(emb, queries, index):
     assert len(sql_ranks) > 0
 
 
+@pytest.mark.parametrize("metric", ["cosine", "dot", "euclidean", "phi_weighted"])
+def test_ivf_arrow_matches_sql_path_every_metric(emb, queries, index, metric):
+    """Driver-side NumPy probe + Arrow fine scan against the SQL twin
+    (crossJoin+Window probe, HOF fine scan), rank for rank, under every
+    metric — the probe and the fine scan both inherit it."""
+    centroids, assignments = index
+    corpus = emb.join(assignments, "vec_id")
+    sql_res = A.ivf_search_batch(corpus, centroids, queries, top_k=10, nprobe=3, metric=metric)
+    arrow_res = A.ivf_search_batch_arrow(
+        corpus, centroids, queries, top_k=10, nprobe=3, metric=metric
+    )
+    sql_ranks = [(r["query_id"], r["rank"], r["vec_id"]) for r in sql_res.collect()]
+    arrow_ranks = [(r["query_id"], r["rank"], r["vec_id"]) for r in arrow_res.collect()]
+    assert arrow_ranks == sql_ranks and sql_ranks
+
+
+def test_ivf_probe_tie_breaks_to_lower_centroid_id(spark):
+    """A query exactly tied between two centroids probes the lower
+    centroid_id (score DESC, centroid_id ASC) on both paths, whatever
+    the order the centroids arrive in."""
+    cents = spark.createDataFrame(
+        [(5, [1.0, 0.0]), (3, [0.0, 1.0]), (8, [-1.0, -1.0])],
+        "centroid_id int, centroid array<double>",
+    )
+    corpus = spark.createDataFrame(
+        [(10, [0.9, 0.1], 5), (11, [0.8, 0.3], 5), (20, [0.1, 0.9], 3), (21, [0.3, 0.8], 3)],
+        "vec_id long, embedding array<double>, centroid_id int",
+    )
+    q = spark.createDataFrame([(0, [1.0, 1.0])], "query_id int, query_embedding array<double>")
+    probed = [r["centroid_id"] for r in A.coarse_probe(cents, q, nprobe=1).collect()]
+    assert probed == [3]
+    for search in (A.ivf_search_batch, A.ivf_search_batch_arrow):
+        got = [r["vec_id"] for r in search(corpus, cents, q, top_k=4, nprobe=1).collect()]
+        assert sorted(got) == [20, 21], search.__name__
+
+
+def test_ivf_arrow_batch_runs_at_most_five_jobs(spark, emb, queries, index, tmp_path, job_group):
+    """One batch search over partitioned storage runs at most 5 Spark
+    jobs: the query and centroid collects, the kernel stage and the
+    merge stage (the coarse probe runs on the driver, the queries are
+    collected once, no Window or orderBy stages)."""
+    centroids, assignments = index
+    path = str(tmp_path / "ivf")
+    A.write_ivf_corpus(emb, assignments, path)
+    ivf = spark.read.parquet(path)
+    rows = []
+    jobs, _stages = job_group(
+        "ivf-arrow-jobs",
+        lambda: rows.extend(
+            A.ivf_search_batch_arrow(ivf, centroids, queries, top_k=10, nprobe=3).collect()
+        ),
+    )
+    assert rows and len(jobs) <= 5, jobs
+
+
+def test_ivf_arrow_dirty_queries_and_centroids_raise(spark, emb, index):
+    """A NULL or wrong-dimension query vector, or a wrong-dimension
+    centroid, fails with a ValueError naming it — not a TypeError from
+    inside the kernel."""
+    centroids, assignments = index
+    corpus = emb.join(assignments, "vec_id")
+    dim = len(centroids.first()["centroid"])
+    good = [0.5] * dim
+    schema = "query_id long, query_embedding array<float>"
+    for rows, match in (
+        ([(1, good), (7, None)], "query 7: NULL"),
+        ([(1, good), (9, good[:-1])], f"query 9: vector has dimension {dim - 1}, expected {dim}"),
+    ):
+        with pytest.raises(ValueError, match=match):
+            A.ivf_search_batch_arrow(corpus, centroids, spark.createDataFrame(rows, schema))
+    # a lone query of the wrong dimension is measured against the centroids
+    with pytest.raises(ValueError, match="query 2: vector has dimension 3"):
+        A.ivf_search_batch_arrow(corpus, centroids, spark.createDataFrame([(2, [1.0] * 3)], schema))
+    cents = [(r["centroid_id"], list(r["centroid"])) for r in centroids.collect()]
+    cents[4] = (cents[4][0], cents[4][1][:-2])
+    with pytest.raises(ValueError, match=f"centroid {cents[4][0]}: vector has dimension {dim - 2}"):
+        A.ivf_search_batch_arrow(corpus, cents, spark.createDataFrame([(1, good)], schema))
+
+
 def test_pq_exact_when_every_subvector_is_a_centroid(spark):
     """With N == ksub the seeded init picks every vector, Lloyd
     converges immediately, and each subvector IS a codebook centroid —

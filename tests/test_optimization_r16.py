@@ -15,9 +15,6 @@ silently re-sheds tracked queries fails here first.
 from __future__ import annotations
 
 import json
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from bench import HEADLINE, MAX_JSON_LINE, QUERY_PRUNE_ORDER, compact_json_line
 

@@ -81,8 +81,9 @@ def test_pruned_projection_reaches_scan(spark):
         # decontamination: the benchmark shingle set must broadcast —
         # the corpus side never shuffles its text
         ("doc_decontaminate", ["BroadcastHashJoin", "HashAggregate"]),
-        # Arrow knn: corpus scanned once; ranking is the only window
-        ("knn_cosine_arrow_topk", ["Window"]),
+        # Arrow knn: corpus scanned once; per-partition top-k, then one
+        # single-partition merge task ranks (no Window, no orderBy)
+        ("knn_cosine_arrow_topk", ["MapInPandas", "SinglePartition"]),
     ],
 )
 def test_curation_plan_shape(spark, name, required):

@@ -61,3 +61,50 @@ def test_arrow_path_tied_scores_break_by_id(spark):
     assert [r["vec_id"] for r in res] == [1, 7, 8, 23]
     sql = knn_search_batch(corpus, q, top_k=4).collect()
     assert [r["vec_id"] for r in sql] == [r["vec_id"] for r in res]
+
+
+def test_arrow_path_dirty_queries_raise(emb, spark):
+    """A NULL or wrong-dimension query vector fails with a ValueError
+    naming the query id, not a TypeError inside the kernel."""
+    schema = "query_id long, query_embedding array<float>"
+    for rows, match in (
+        ([(1, [0.1] * 8), (5, None), (6, [0.1] * 8)], "query 5: NULL"),
+        ([(1, [0.1] * 8), (5, [0.1] * 8), (6, [0.1] * 3)], "query 6: vector has dimension 3, expected 8"),
+    ):
+        with pytest.raises(ValueError, match=match):
+            knn_search_batch_arrow(emb, spark.createDataFrame(rows, schema))
+
+
+def test_kernel_stage_no_wider_than_cluster(emb, queries, spark, tmp_path, job_group):
+    """A pruned scan of many small files (one per cell per write, as an
+    IVF layout after appends) runs at most defaultParallelism kernel
+    tasks: the small input is narrow-coalesced, with the same ranks."""
+    path = str(tmp_path / "cells")
+    for part in range(3):
+        (emb.filter(F.col("vec_id") % 3 == part)
+         .withColumn("cell", (F.col("vec_id") % 8).cast("int"))
+         .repartition(2).write.mode("append").partitionBy("cell").parquet(path))
+    pruned = spark.read.parquet(path).filter(F.col("cell").isin([0, 1, 2, 3, 4, 5]))
+    width = spark.sparkContext.defaultParallelism
+    assert pruned.rdd.getNumPartitions() > width  # the scan alone is wider
+    rows = []
+    _jobs, stages = job_group(
+        "kernel-narrow",
+        lambda: rows.extend(knn_search_batch_arrow(pruned, queries, top_k=5).collect()),
+    )
+    assert max(s.numTasks for s in stages) <= width
+    want = knn_search_batch(pruned, queries, top_k=5).collect()
+    assert [(r["query_id"], r["rank"], r["vec_id"]) for r in rows] == [
+        (r["query_id"], r["rank"], r["vec_id"]) for r in want
+    ]
+
+
+def test_single_file_scan_with_min_partitions_still_spreads(emb, queries, job_group):
+    """The other direction is kept: a one-file scan given min_partitions
+    is spread over that many kernel tasks."""
+    assert emb.rdd.getNumPartitions() == 1
+    _jobs, stages = job_group(
+        "kernel-spread",
+        lambda: knn_search_batch_arrow(emb, queries, top_k=5, min_partitions=6).collect(),
+    )
+    assert max(s.numTasks for s in stages) == 6
