@@ -7,7 +7,8 @@ mutation class becomes a set-algebra batch op, and the digest is computed
 once per batch commit:
 
 - insert  (A13, vector_field.py:133-175): union of validated new rows;
-  duplicate-PK rejection = inner-join count check (ValueError analog).
+  duplicate-PK rejection = one aggregate over the batch's per-id counts
+  joined to the corpus ids (ValueError analog).
 - update  (A15, vector_field.py:181-194): join-replace; KeyError analog =
   anti-join count check.
 - delete  (A16, vector_field.py:196-216): anti-join, with membership
@@ -15,14 +16,17 @@ once per batch commit:
 - digest  (A17, vector_field.py:95-103): order-insensitive deterministic
   dataset hash — sha2 over the comma-joined sorted id set; plus a
   commutative sum(xxhash64) variant that needs no global sort at 100 TB.
-- audit   (A18, vector_field.py:105-117): append-only DataFrame of
-  {action, ts, hash_before, hash_after, payload}.
+- audit   (A18, vector_field.py:105-117): append-only records of
+  {action, ts, hash_before, hash_after, payload, seq}, kept as Python
+  tuples and read as one DataFrame.
 - stats   (A23, vector_field.py:467-478): one aggregate pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from datetime import datetime, timezone
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -128,14 +132,19 @@ def insert_rows(existing: DataFrame, new_rows: DataFrame, id_col: str = "iglyph_
     """A13: batch insert. on_duplicate: 'error' (reference ValueError,
     vector_field.py:159-160) | 'skip' (import semantics) | 'overwrite'."""
     if on_duplicate == "error":
-        dup = existing.join(new_rows.select(id_col), id_col, "inner").limit(1).count()
-        if dup:
+        # One action for both PK checks: the batch's per-id counts,
+        # left-joined to the corpus ids (the planner broadcasts the corpus
+        # side when it is small, as for point adds).
+        flags = (
+            new_rows.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+            .join(existing.select(id_col, F.lit(1).alias("hit")), id_col, "left")
+            .agg(F.max("hit").alias("dup"), F.max("n").alias("max_n"))
+            .collect()[0]
+        )
+        if flags["dup"]:
             raise ValueError(f"duplicate {id_col} in insert batch")
         # the PK contract also rejects duplicates WITHIN the batch
-        internal = (
-            new_rows.groupBy(id_col).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if internal:
+        if (flags["max_n"] or 0) > 1:
             raise ValueError(f"duplicate {id_col} within insert batch")
         return existing.unionByName(new_rows, allowMissingColumns=True)
     if on_duplicate == "skip":
@@ -209,25 +218,20 @@ def delete_with_membership_cleanup(
 
 
 def audit_record(
-    spark: SparkSession,
     action: str,
     hash_before: str,
     hash_after: str,
     payload: dict[str, str] | None = None,
     seq: int = 0,
-) -> DataFrame:
-    """A18: one hash-chained audit row (vector_field.py:105-117), computed
-    once per batch commit instead of once per row. `seq` is the commit
-    sequence number — the chain's total order (wall-clock ts alone can
-    collide at µs resolution and would make chain verification
-    order-ambiguous)."""
-    return spark.createDataFrame(
-        [(action, hash_before, hash_after, payload or {}, seq)],
-        "action string, hash_before string, hash_after string,"
-        " payload map<string,string>, seq long",
-    ).withColumn("ts", F.current_timestamp()).select(
-        "action", "ts", "hash_before", "hash_after", "payload", "seq"
-    )
+) -> tuple:
+    """A18: one hash-chained audit record (vector_field.py:105-117),
+    computed once per batch commit instead of once per row, as a
+    Python tuple in `schemas.AUDIT_SCHEMA` column order. `ts` is the
+    local clock (UTC) when the record is made, fixed from then on.
+    `seq` is the commit sequence number — the chain's total order
+    (wall-clock ts alone can collide at µs resolution and would make
+    chain verification order-ambiguous)."""
+    return (action, datetime.now(timezone.utc), hash_before, hash_after, payload or {}, seq)
 
 
 def verify_audit_chain(audit: DataFrame, ts_col: str = "ts") -> dict:

@@ -4,9 +4,17 @@ Mirrors the public surface of vector_field.py:45-486 (add/get/update/
 delete, form_cluster, recompute, search, search_pglyphs, auto_cluster_phi,
 export/import JSONL, snapshot, stats) with batch-oriented semantics:
 
-- state is three DataFrames (iglyphs, pglyphs, membership) + an append-only
-  audit DataFrame, all immutable; every mutation returns via set algebra
-  and re-binds the handles.
+- state is three DataFrames (iglyphs, pglyphs, membership), all
+  immutable; every mutation returns via set algebra and re-binds the
+  handles. Every mutation but the bulk path `add_iglyphs_batch` (which
+  keeps its partitioning) re-binds through `_rebind`: a narrow coalesce
+  to at most max(the handle's partitions before, defaultParallelism),
+  then a lazy localCheckpoint. So one-row adds do not widen the corpus
+  every later search scans.
+- the audit log is append-only Python records, each stamped with the
+  local clock when it is logged; `audit` builds one DataFrame from them
+  on read (after any audit frame loaded from a snapshot), so a read
+  neither re-stamps them nor grows with a chain of unions.
 - the dataset digest is hash-chained per BATCH commit (vector_field.py's
   per-row digest is the O(N²) hazard documented in BASELINE.md).
 - error contracts preserved: ValueError on dup insert / empty cluster /
@@ -18,6 +26,7 @@ For interactive single-row use this facade is convenience; the real
 
 from __future__ import annotations
 
+import math
 import uuid
 from typing import Any, Sequence
 
@@ -41,7 +50,8 @@ class VectorField:
         self.iglyphs: DataFrame = spark.createDataFrame([], schemas.IGLYPH_SCHEMA)
         self.pglyphs: DataFrame = spark.createDataFrame([], schemas.PGLYPH_SCHEMA)
         self.membership: DataFrame = spark.createDataFrame([], schemas.MEMBERSHIP_SCHEMA)
-        self.audit: DataFrame = spark.createDataFrame([], schemas.AUDIT_SCHEMA)
+        self._audit_rows: list[tuple] = []
+        self._audit_loaded: DataFrame | None = None
         self._audit_seq = 0
         self.current_hash = self._digest()
 
@@ -57,15 +67,41 @@ class VectorField:
         self.current_hash = self._digest()
         self._audit_seq += 1
         rec = crud.audit_record(
-            self.spark, action, old, self.current_hash,
+            action, old, self.current_hash,
             {k: str(v) for k, v in payload.items()}, seq=self._audit_seq,
         )
-        self.audit = self.audit.unionByName(rec, allowMissingColumns=True)
+        if self._audit_rows and rec[1] < self._audit_rows[-1][1]:
+            # a clock stepped back: keep ts non-decreasing in seq
+            rec = (rec[0], self._audit_rows[-1][1], *rec[2:])
+        self._audit_rows.append(rec)
+
+    @property
+    def audit(self) -> DataFrame:
+        """A18 change history: the logged records as one DataFrame,
+        after the audit frame of the snapshot this handle was loaded from."""
+        logged = self.spark.createDataFrame(self._audit_rows, schemas.AUDIT_SCHEMA)
+        if self._audit_loaded is None:
+            return logged
+        return self._audit_loaded.unionByName(logged, allowMissingColumns=True)
+
+    def _rebind(self, result: DataFrame, before: DataFrame) -> DataFrame:
+        """Re-bind a handle after a point mutation: narrow-coalesce
+        `result` to at most max(`before`'s partitions, defaultParallelism),
+        then checkpoint it lazily. The coalesce never widens and adds no
+        shuffle, so unioning a one-row frame (its own few partitions) onto
+        the corpus leaves the width every later search scans unchanged."""
+        width = max(before.rdd.getNumPartitions(), self.spark.sparkContext.defaultParallelism)
+        return result.coalesce(width).localCheckpoint(eager=False)
 
     def _validate_vec(self, embedding: Sequence[float]) -> list[float]:
-        vec = [float(x) for x in embedding]
+        """Length and slot check of `schemas.valid_embedding`, in Python:
+        exactly `dim` values, none NULL or NaN."""
+        vec = [math.nan if x is None else float(x) for x in embedding]
         if len(vec) != self.dim:
             raise ValueError(f"Embedding dim mismatch: expected {self.dim}, got {len(vec)}.")
+        bad = next((i for i, x in enumerate(vec) if math.isnan(x)), None)
+        if bad is not None:
+            raise ValueError(f"embedding[{bad}] is NULL or NaN")
         return vec
 
     @staticmethod
@@ -110,8 +146,9 @@ class VectorField:
             "iglyph_id string, glyph_id long, outer_context_id int, embedding array<float>,"
             " label string, proto_id string, meta map<string,string>, version string",
         ).withColumn("ts", F.current_timestamp())
-        self.iglyphs = crud.insert_rows(self.iglyphs, row, "iglyph_id", on_duplicate="error")
-        self.iglyphs = self.iglyphs.localCheckpoint(eager=False)
+        self.iglyphs = self._rebind(
+            crud.insert_rows(self.iglyphs, row, "iglyph_id", on_duplicate="error"), self.iglyphs
+        )
         self._log("ADD_IGLYPH", iglyph_id=_id, glyph_id=glyph_id,
                   outer_context_id=outer_context_id, label=label)
         return _id
@@ -131,8 +168,8 @@ class VectorField:
         upd = self.spark.createDataFrame(
             [(iglyph_id, vec)], "iglyph_id string, embedding array<float>"
         )
-        self.iglyphs = crud.update_embeddings(self.iglyphs, upd, "iglyph_id").localCheckpoint(
-            eager=False
+        self.iglyphs = self._rebind(
+            crud.update_embeddings(self.iglyphs, upd, "iglyph_id"), self.iglyphs
         )
         self._log("UPDATE_IGLYPH", iglyph_id=iglyph_id)
 
@@ -144,7 +181,7 @@ class VectorField:
         # strict KeyError contract (vector_field.py:198-199)
         if self.iglyphs.filter(F.col("iglyph_id") == iglyph_id).limit(1).count() == 0:
             raise KeyError(f"IGlyph {iglyph_id!r} not found.")
-        self.iglyphs = remaining.localCheckpoint(eager=False)
+        self.iglyphs = self._rebind(remaining, self.iglyphs)
         self.membership = new_membership
         self._log("DELETE_IGLYPH", iglyph_id=iglyph_id)
 
@@ -176,8 +213,8 @@ class VectorField:
         )
         mem = C.membership(grouped, ["__g__"], id_col="iglyph_id")
         pgid = pg.select("pglyph_id").collect()[0][0]
-        self.pglyphs = self.pglyphs.unionByName(pg).localCheckpoint(eager=False)
-        self.membership = self.membership.unionByName(mem).localCheckpoint(eager=False)
+        self.pglyphs = self._rebind(self.pglyphs.unionByName(pg), self.pglyphs)
+        self.membership = self._rebind(self.membership.unionByName(mem), self.membership)
         self._log("FORM_CLUSTER", pglyph_id=pgid, anchor_glyph_id=anchor_glyph_id,
                   cluster_tag=cluster_tag)
         return pgid
@@ -213,7 +250,7 @@ class VectorField:
             F.when(F.col("pglyph_id") == pglyph_id, F.lit(stats_row["n"]).cast("long"))
             .otherwise(F.col("member_count")),
         )
-        self.pglyphs = updated.localCheckpoint(eager=False)
+        self.pglyphs = self._rebind(updated, self.pglyphs)
         self._log("RECOMPUTE_PGLYPH", pglyph_id=pglyph_id, members=stats_row["n"])
 
     # ------------------------------------------------------------------
@@ -259,8 +296,8 @@ class VectorField:
         )
         mem = C.membership(banded, ["band"], id_col="iglyph_id")
         ids = [r["pglyph_id"] for r in pg_rows.select("pglyph_id").collect()]
-        self.pglyphs = self.pglyphs.unionByName(pg_rows).localCheckpoint(eager=False)
-        self.membership = self.membership.unionByName(mem).localCheckpoint(eager=False)
+        self.pglyphs = self._rebind(self.pglyphs.unionByName(pg_rows), self.pglyphs)
+        self.membership = self._rebind(self.membership.unionByName(mem), self.membership)
         self._log("AUTO_CLUSTER_PHI", outer_context_id=outer_context_id, clusters=len(ids))
         return ids
 
@@ -284,7 +321,7 @@ class VectorField:
             self.spark, lines, self.iglyphs, schemas.IGLYPH_SCHEMA, self.dim,
             overwrite=overwrite,
         )
-        self.iglyphs = merged.localCheckpoint(eager=False)
+        self.iglyphs = self._rebind(merged, self.iglyphs)
         self._log("IMPORT_JSONL", count=count, overwrite=overwrite)
         return count
 
@@ -315,12 +352,12 @@ class VectorField:
         db.iglyphs = spark.read.parquet(f"{path}/iglyphs")
         db.pglyphs = spark.read.parquet(f"{path}/pglyphs")
         db.membership = spark.read.parquet(f"{path}/membership")
-        db.audit = spark.read.parquet(f"{path}/audit")
+        db._audit_loaded = spark.read.parquet(f"{path}/audit")
         # Resume the audit sequence where the snapshot left off; otherwise
         # post-restore mutations would re-issue seq 1..N and make
         # verify_audit_chain's orderBy(seq) ambiguous.
-        if "seq" in db.audit.columns:
-            max_seq = db.audit.agg(F.max("seq")).collect()[0][0]
+        if "seq" in db._audit_loaded.columns:
+            max_seq = db._audit_loaded.agg(F.max("seq")).collect()[0][0]
             db._audit_seq = int(max_seq) if max_seq is not None else 0
         db.current_hash = db._digest()
         if db.current_hash != manifest["current_hash"]:
