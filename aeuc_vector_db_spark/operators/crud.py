@@ -3,8 +3,9 @@
 The reference mutates in-place dicts per row and recomputes a Blake2b
 digest over ALL ids on EVERY mutation (vector_field.py:95-117) — measured
 O(N²) ingest collapse (BASELINE.md). On Spark's immutable substrate each
-mutation class becomes a set-algebra batch op, and the digest is computed
-once per batch commit:
+mutation class becomes a set-algebra batch op, and the digest is a
+multiset hash a caller updates from each commit's inserted and deleted
+ids:
 
 - insert  (A13, vector_field.py:133-175): union of validated new rows;
   duplicate-PK rejection = one aggregate over the batch's per-id counts
@@ -14,8 +15,12 @@ once per batch commit:
 - delete  (A16, vector_field.py:196-216): anti-join, with membership
   cleanup and stale-cluster flagging for recompute (A19).
 - digest  (A17, vector_field.py:95-103): order-insensitive deterministic
-  dataset hash — sha2 over the comma-joined sorted id set; plus a
-  commutative sum(xxhash64) variant that needs no global sort at 100 TB.
+  dataset hash. `dataset_digest` is LtHash16 (a lattice multiset hash,
+  Lewi et al. 2019, after Bellare–Micciancio 1997): each id maps to 1024
+  uint16 lanes and the set's lanes are their sum mod 2¹⁶, so a caller can
+  add or subtract one id's lanes (`lthash`) instead of re-hashing the set
+  on every mutation. Plus a commutative sum(xxhash64) variant that runs as
+  one Spark aggregate at 100 TB.
 - audit   (A18, vector_field.py:105-117): append-only records of
   {action, ts, hash_before, hash_after, payload, seq}, kept as Python
   tuples and read as one DataFrame.
@@ -24,26 +29,62 @@ once per batch commit:
 
 from __future__ import annotations
 
+import hashlib
 from datetime import datetime, timezone
+from itertools import islice
+from typing import Iterable
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: what `dataset_digest` computes; snapshots record it in their manifest
+DIGEST_SCHEME = "lthash16-blake2b256"
+_LANES = 1024
 
-def dataset_digest(df: DataFrame, id_col: str = "iglyph_id") -> str:
-    """Deterministic order-insensitive digest of the id set (A17).
 
-    Exact small/medium-scale form: sha2-256 over the comma-joined sorted id
-    list. The reference's Blake2b-over-JSON (vector_field.py:95-103) is an
-    implementation detail; the contract is 'same id set ⇒ same hash,
-    any change ⇒ different hash', which sha2 preserves.
+def lthash(ids: Iterable[str]) -> np.ndarray:
+    """LtHash16 lanes of a multiset of ids: the lane-wise sum mod 2¹⁶ of
+    H(id) = shake_256(id).digest(2048) read as 1024 little-endian uint16.
+
+    Returns uint16 lanes, so `+` and `-` on them wrap mod 2¹⁶: adding
+    `lthash([x])` to a set's lanes inserts x, subtracting it removes x
+    again exactly. About 12 µs per id on one core."""
+    acc = np.zeros(_LANES, np.uint64)
+    it = iter(ids)
+    while chunk := list(islice(it, 4096)):
+        buf = b"".join(hashlib.shake_256(i.encode()).digest(2 * _LANES) for i in chunk)
+        acc += np.frombuffer(buf, "<u2").reshape(-1, _LANES).sum(axis=0, dtype=np.uint64)
+    return (acc % (1 << 16)).astype(np.uint16)
+
+
+def lthash_hex(lanes: np.ndarray) -> str:
+    """The 64-hex digest of LtHash16 lanes: blake2b-256 of their bytes."""
+    return hashlib.blake2b(lanes.astype("<u2").tobytes(), digest_size=32).hexdigest()
+
+
+def dataset_digest(df: DataFrame, id_col: str = "iglyph_id", *, lanes: bool = False):
+    """Deterministic order-insensitive digest of the id set (A17), scheme
+    `DIGEST_SCHEME`: `lthash_hex(lthash(ids))` over the non-NULL ids.
+
+    The contract is the reference's (vector_field.py:95-103, whose
+    Blake2b-over-JSON bytes are an implementation detail): same id set ⇒
+    same hash, any change ⇒ different hash (up to a 2⁻¹²⁸-scale
+    collision). Being a multiset hash, it equals the running value a
+    caller keeps by adding and subtracting `lthash` of each id it
+    inserts and deletes; this function is the full recompute of that
+    value. With `lanes=True` it returns the lanes instead of their hex,
+    so such a caller can resume from them.
+
+    Cost: one Spark job collecting the ids, then ~12 µs of hashing per
+    id on the driver — 0.16–0.20 s at 2k ids and 2.7–2.8 s at 200k on a
+    4-vCPU host, where the sorted sha2 it replaced took 0.21 s and
+    0.22–0.28 s. It is for snapshot verification and bulk re-derivation,
+    not for per-row mutations.
     """
-    row = df.agg(
-        F.sha2(
-            F.concat_ws(",", F.sort_array(F.collect_list(F.col(id_col).cast("string")))), 256
-        ).alias("digest")
-    ).collect()[0]
-    return row["digest"]
+    ids = df.where(F.col(id_col).isNotNull()).select(F.col(id_col).cast("string"))
+    out = lthash(r[0] for r in ids.collect())
+    return out if lanes else lthash_hex(out)
 
 
 def dataset_digest_scalable(df: DataFrame, id_col: str = "iglyph_id") -> int:
@@ -78,10 +119,9 @@ def dataset_digest_blake2b(
 
     The id lists collect to the driver — this is the byte-parity tool
     for validating against a reference DB dump, not a scale path; the
-    scale digests are dataset_digest (sorted sha2) and
-    dataset_digest_scalable (commutative, single aggregate).
+    other digests are dataset_digest (LtHash16, incrementally updatable)
+    and dataset_digest_scalable (commutative, single aggregate).
     """
-    import hashlib
     import json
 
     ig = sorted(r[0] for r in iglyphs.select(iglyph_id_col).collect())

@@ -1657,13 +1657,32 @@ class ManifestTable:
             evolve=evolve,
         )
 
+    def _sized_like_parent(self, df: DataFrame, m: dict) -> DataFrame:
+        """Output file sizing for a snapshot rewrite (optimization round
+        16, guide §6): the rewrite must not inherit the SCAN's split
+        count — under a small spark.sql.files.maxPartitionBytes (the
+        session default is 8 MB locally) a 2 GB snapshot would otherwise
+        shatter into hundreds of split-sized files that the next
+        compact_small sweeps as small-file debt. The parent snapshot's
+        real byte size (known from manifest `m`) sizes the output at
+        ~128 MB per file; coalesce merges the splits without a shuffle."""
+        import math as _math
+
+        total = sum(os.path.getsize(os.path.join(self.root, f)) for f in m["files"])
+        return df.coalesce(max(1, _math.ceil(total / (128 * 1024 * 1024))))
+
     def commit_overwrite(self, df: DataFrame) -> int:
         """Replace the snapshot with df (new files; old versions remain
         time-travel readable until vacuumed). CHECK constraints survive
-        an overwrite, so the replacement data must satisfy them too."""
+        an overwrite, so the replacement data must satisfy them too.
+        Over an existing snapshot the output is sized from the parent's
+        bytes (`_sized_like_parent`); a replacement meant to keep its own
+        file layout goes through `compact(sort_by=, n_files=)` instead."""
         pv = self.latest_version()
         if pv is not None:
-            self._enforce_constraints(df, self.manifest(pv))
+            m = self.manifest(pv)
+            self._enforce_constraints(df, m)
+            df = self._sized_like_parent(df, m)
         files, n = self._write_data_dir(df)
         return self._commit("overwrite", files, n, keep_parent_files=False)
 
@@ -1717,7 +1736,9 @@ class ManifestTable:
             merged = current.join(
                 updates.select(key).distinct(), key, "left_anti"
             ).unionByName(updates)
-            files, n = self._write_data_dir(merged)
+            files, n = self._write_data_dir(
+                self._sized_like_parent(merged, self.manifest(parent))
+            )
             try:
                 return self._commit(
                     "merge", files, n, keep_parent_files=False, expected_parent=parent
@@ -2104,29 +2125,15 @@ class ManifestTable:
     def delete_where(self, spark: SparkSession, condition) -> int:
         """Keep rows NOT matching `condition` (a Column) as a new version.
         Rewrites the snapshot — O(table); see `delete_where_dv` for the
-        O(matching files) form.
-
-        Output file sizing (optimization round 16, guide §6): the
-        rewrite must not inherit the SCAN's split count — under a small
-        spark.sql.files.maxPartitionBytes (the session default is 8 MB
-        locally) a 2 GB snapshot would otherwise shatter into hundreds
-        of split-sized files that the next compact_small sweeps as
-        small-file debt. The parent snapshot's REAL byte size (known
-        from the manifest) sizes the output at ~128 MB per file;
-        coalesce (no shuffle) merges the scan splits back at write
-        while keeping the scan itself parallel."""
-        import math as _math
-
+        O(matching files) form. The output is sized from the parent's
+        bytes (`_sized_like_parent`)."""
         parent = self.latest_version()
         if parent is None:
             raise FileNotFoundError(f"no committed version at {self.root!r}")
-        m = self.manifest(parent)
-        total = sum(
-            os.path.getsize(os.path.join(self.root, f)) for f in m["files"]
-        )
-        n_out = max(1, _math.ceil(total / (128 * 1024 * 1024)))
         kept = self.read(spark, parent).filter(~condition)
-        files, n = self._write_data_dir(kept.coalesce(n_out))
+        files, n = self._write_data_dir(
+            self._sized_like_parent(kept, self.manifest(parent))
+        )
         return self._commit(
             "delete", files, n, keep_parent_files=False, expected_parent=parent
         )
@@ -2819,6 +2826,11 @@ class BucketedManifestTable(ManifestTable):
                 "layout is keyed on it; rewrite into a new table to drop it"
             )
         return super().drop_column(name)
+
+    def _sized_like_parent(self, df: DataFrame, m: dict) -> DataFrame:
+        # the bucket count sets the file layout (`_write_data_dir`
+        # shuffles by bucket); a coalesce would only narrow the map side
+        return df
 
     def _bucket_col(self):
         return F.pmod(

@@ -9,14 +9,20 @@ export/import JSONL, snapshot, stats) with batch-oriented semantics:
   handles. Every mutation but the bulk path `add_iglyphs_batch` (which
   keeps its partitioning) re-binds through `_rebind`: a narrow coalesce
   to at most max(the handle's partitions before, defaultParallelism),
-  then a lazy localCheckpoint. So one-row adds do not widen the corpus
-  every later search scans.
+  then a localCheckpoint that the mutation itself materialises. So
+  one-row adds do not widen the corpus every later search scans, and no
+  search pays for the copy a mutation made.
 - the audit log is append-only Python records, each stamped with the
   local clock when it is logged; `audit` builds one DataFrame from them
   on read (after any audit frame loaded from a snapshot), so a read
   neither re-stamps them nor grows with a chain of unions.
-- the dataset digest is hash-chained per BATCH commit (vector_field.py's
-  per-row digest is the O(N²) hazard documented in BASELINE.md).
+- the dataset digest `current_hash` is an LtHash16 multiset hash of the
+  iglyph and pglyph ids (`crud.lthash`), updated on the driver from each
+  mutation's inserted and deleted ids, so its cost does not grow with
+  the corpus (the reference re-hashes every id per mutation, the O(N²)
+  hazard documented in BASELINE.md). `load_snapshot`, `import_jsonl`
+  and the skip/overwrite bulk modes recompute it over every id
+  (`crud.dataset_digest`); audit records chain it.
 - error contracts preserved: ValueError on dup insert / empty cluster /
   unknown metric; KeyError on update/delete of a missing id.
 
@@ -30,10 +36,12 @@ import math
 import uuid
 from typing import Any, Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aeuc_vector_db_spark import schemas
+from aeuc_vector_db_spark.functions.vector import lit_vector
 from aeuc_vector_db_spark.operators import clustering as C
 from aeuc_vector_db_spark.operators import crud, search
 from aeuc_vector_db_spark.sources import jsonl as jsonl_src
@@ -53,18 +61,22 @@ class VectorField:
         self._audit_rows: list[tuple] = []
         self._audit_loaded: DataFrame | None = None
         self._audit_seq = 0
-        self.current_hash = self._digest()
+        self._lanes = crud.lthash(())
+        self.current_hash = crud.lthash_hex(self._lanes)
 
     # ------------------------------------------------------------------
-    def _digest(self) -> str:
+    def _full_lanes(self) -> np.ndarray:
+        """The digest lanes recomputed over every iglyph and pglyph id."""
         ids = self.iglyphs.select(F.col("iglyph_id").alias("id")).unionAll(
             self.pglyphs.select(F.col("pglyph_id").alias("id"))
         )
-        return crud.dataset_digest(ids, "id")
+        return crud.dataset_digest(ids, "id", lanes=True)
 
-    def _log(self, action: str, **payload: Any) -> None:
+    def _log(self, action: str, lanes: np.ndarray, **payload: Any) -> None:
+        """Record a mutation that left the id set with digest `lanes`."""
         old = self.current_hash
-        self.current_hash = self._digest()
+        self._lanes = lanes
+        self.current_hash = crud.lthash_hex(lanes)
         self._audit_seq += 1
         rec = crud.audit_record(
             action, old, self.current_hash,
@@ -84,14 +96,17 @@ class VectorField:
             return logged
         return self._audit_loaded.unionByName(logged, allowMissingColumns=True)
 
-    def _rebind(self, result: DataFrame, before: DataFrame) -> DataFrame:
+    def _rebind(self, result: DataFrame, before: DataFrame, eager: bool = True) -> DataFrame:
         """Re-bind a handle after a point mutation: narrow-coalesce
         `result` to at most max(`before`'s partitions, defaultParallelism),
-        then checkpoint it lazily. The coalesce never widens and adds no
+        then checkpoint it. The coalesce never widens and adds no
         shuffle, so unioning a one-row frame (its own few partitions) onto
-        the corpus leaves the width every later search scans unchanged."""
+        the corpus leaves the width every later search scans unchanged.
+        The checkpoint is eager (one job) unless the caller runs the
+        action that materialises it (`eager=False`), so the copy is
+        never left for the next search to make."""
         width = max(before.rdd.getNumPartitions(), self.spark.sparkContext.defaultParallelism)
-        return result.coalesce(width).localCheckpoint(eager=False)
+        return result.coalesce(width).localCheckpoint(eager=eager)
 
     def _validate_vec(self, embedding: Sequence[float]) -> list[float]:
         """Length and slot check of `schemas.valid_embedding`, in Python:
@@ -130,34 +145,42 @@ class VectorField:
         vec = self._validate_vec(embedding)
         self._check_ranges(glyph_id, outer_context_id)
         _id = iglyph_id or str(uuid.uuid4())
-        row = self.spark.createDataFrame(
-            [
-                (
-                    _id,
-                    glyph_id,
-                    outer_context_id,
-                    vec,
-                    label,
-                    None,
-                    {k: str(v) for k, v in (meta or {}).items()},
-                    VERSION,
-                )
-            ],
-            "iglyph_id string, glyph_id long, outer_context_id int, embedding array<float>,"
-            " label string, proto_id string, meta map<string,string>, version string",
-        ).withColumn("ts", F.current_timestamp())
-        self.iglyphs = self._rebind(
-            crud.insert_rows(self.iglyphs, row, "iglyph_id", on_duplicate="error"), self.iglyphs
+        # literals over a one-partition range, not a createDataFrame of
+        # Python rows: those are a Python RDD whose partitions each need a
+        # Python worker in the add's job
+        meta_kv = [c for k, v in (meta or {}).items() for c in (F.lit(k), F.lit(str(v)))]
+        row = self.spark.range(0, 1, 1, 1).select(
+            F.lit(_id).alias("iglyph_id"),
+            F.lit(glyph_id).cast("long").alias("glyph_id"),
+            F.lit(outer_context_id).cast("int").alias("outer_context_id"),
+            lit_vector(vec).cast("array<float>").alias("embedding"),
+            F.lit(label).cast("string").alias("label"),
+            F.lit(None).cast("string").alias("proto_id"),
+            F.create_map(*meta_kv).cast("map<string,string>").alias("meta"),
+            F.lit(VERSION).alias("version"),
+            F.current_timestamp().alias("ts"),
         )
-        self._log("ADD_IGLYPH", iglyph_id=_id, glyph_id=glyph_id,
-                  outer_context_id=outer_context_id, label=label)
+        merged = self._rebind(
+            self.iglyphs.unionByName(row, allowMissingColumns=True), self.iglyphs, eager=False
+        )
+        # One action both materialises the checkpoint and checks the PK:
+        # the corpus has unique ids, so the new one occurs once unless taken.
+        if len(merged.filter(F.col("iglyph_id") == _id).select("iglyph_id").collect()) != 1:
+            raise ValueError("duplicate iglyph_id in insert batch")
+        self.iglyphs = merged
+        self._log("ADD_IGLYPH", self._lanes + crud.lthash([_id]), iglyph_id=_id,
+                  glyph_id=glyph_id, outer_context_id=outer_context_id, label=label)
         return _id
 
     def add_iglyphs_batch(self, rows: DataFrame, on_duplicate: str = "error") -> None:
         """Bulk path: validated insert of a whole DataFrame in one commit."""
         validated = schemas.assert_valid(rows, self.dim, vec_col="embedding")
         self.iglyphs = crud.insert_rows(self.iglyphs, validated, "iglyph_id", on_duplicate)
-        self._log("ADD_IGLYPH_BATCH")
+        if on_duplicate == "error":  # every batch id is new: add their lanes
+            ids = [r[0] for r in validated.select("iglyph_id").collect()]
+            self._log("ADD_IGLYPH_BATCH", self._lanes + crud.lthash(ids))
+        else:
+            self._log("ADD_IGLYPH_BATCH", self._full_lanes())
 
     def get_iglyph(self, iglyph_id: str):
         rows = self.iglyphs.filter(F.col("iglyph_id") == iglyph_id).limit(1).collect()
@@ -171,7 +194,7 @@ class VectorField:
         self.iglyphs = self._rebind(
             crud.update_embeddings(self.iglyphs, upd, "iglyph_id"), self.iglyphs
         )
-        self._log("UPDATE_IGLYPH", iglyph_id=iglyph_id)
+        self._log("UPDATE_IGLYPH", self._lanes, iglyph_id=iglyph_id)
 
     def delete_iglyph(self, iglyph_id: str) -> None:
         ids = self.spark.createDataFrame([(iglyph_id,)], "iglyph_id string")
@@ -183,7 +206,7 @@ class VectorField:
             raise KeyError(f"IGlyph {iglyph_id!r} not found.")
         self.iglyphs = self._rebind(remaining, self.iglyphs)
         self.membership = new_membership
-        self._log("DELETE_IGLYPH", iglyph_id=iglyph_id)
+        self._log("DELETE_IGLYPH", self._lanes - crud.lthash([iglyph_id]), iglyph_id=iglyph_id)
 
     # ------------------------------------------------------------------
     # PGlyph ops (A10, A19, A2)
@@ -214,9 +237,11 @@ class VectorField:
         mem = C.membership(grouped, ["__g__"], id_col="iglyph_id")
         pgid = pg.select("pglyph_id").collect()[0][0]
         self.pglyphs = self._rebind(self.pglyphs.unionByName(pg), self.pglyphs)
-        self.membership = self._rebind(self.membership.unionByName(mem), self.membership)
-        self._log("FORM_CLUSTER", pglyph_id=pgid, anchor_glyph_id=anchor_glyph_id,
-                  cluster_tag=cluster_tag)
+        self.membership = self._rebind(
+            self.membership.unionByName(mem), self.membership, eager=False
+        )
+        self._log("FORM_CLUSTER", self._lanes + crud.lthash([pgid]), pglyph_id=pgid,
+                  anchor_glyph_id=anchor_glyph_id, cluster_tag=cluster_tag)
         return pgid
 
     def get_pglyph(self, pglyph_id: str):
@@ -251,7 +276,7 @@ class VectorField:
             .otherwise(F.col("member_count")),
         )
         self.pglyphs = self._rebind(updated, self.pglyphs)
-        self._log("RECOMPUTE_PGLYPH", pglyph_id=pglyph_id, members=stats_row["n"])
+        self._log("RECOMPUTE_PGLYPH", self._lanes, pglyph_id=pglyph_id, members=stats_row["n"])
 
     # ------------------------------------------------------------------
     # Search (A1, A2) / auto-cluster (A12)
@@ -297,8 +322,11 @@ class VectorField:
         mem = C.membership(banded, ["band"], id_col="iglyph_id")
         ids = [r["pglyph_id"] for r in pg_rows.select("pglyph_id").collect()]
         self.pglyphs = self._rebind(self.pglyphs.unionByName(pg_rows), self.pglyphs)
-        self.membership = self._rebind(self.membership.unionByName(mem), self.membership)
-        self._log("AUTO_CLUSTER_PHI", outer_context_id=outer_context_id, clusters=len(ids))
+        self.membership = self._rebind(
+            self.membership.unionByName(mem), self.membership, eager=False
+        )
+        self._log("AUTO_CLUSTER_PHI", self._lanes + crud.lthash(ids),
+                  outer_context_id=outer_context_id, clusters=len(ids))
         return ids
 
     # ------------------------------------------------------------------
@@ -321,8 +349,9 @@ class VectorField:
             self.spark, lines, self.iglyphs, schemas.IGLYPH_SCHEMA, self.dim,
             overwrite=overwrite,
         )
-        self.iglyphs = self._rebind(merged, self.iglyphs)
-        self._log("IMPORT_JSONL", count=count, overwrite=overwrite)
+        # the full recompute below is the action that materialises it
+        self.iglyphs = self._rebind(merged, self.iglyphs, eager=False)
+        self._log("IMPORT_JSONL", self._full_lanes(), count=count, overwrite=overwrite)
         return count
 
     def snapshot(self, path: str) -> dict:
@@ -333,7 +362,7 @@ class VectorField:
         self.pglyphs.write.mode("overwrite").parquet(f"{path}/pglyphs")
         self.membership.write.mode("overwrite").parquet(f"{path}/membership")
         self.audit.write.mode("overwrite").parquet(f"{path}/audit")
-        manifest = {"version": VERSION, "dim": self.dim,
+        manifest = {"version": VERSION, "dim": self.dim, "digest": crud.DIGEST_SCHEME,
                     "current_hash": self.current_hash, "path": path}
         # manifest written driver-side: tiny, and must be a single file
         with open(f"{path}/manifest.json", "w") as f:
@@ -348,6 +377,12 @@ class VectorField:
 
         with open(f"{path}/manifest.json") as f:
             manifest = json.load(f)
+        scheme = manifest.get("digest")
+        if scheme != crud.DIGEST_SCHEME:
+            raise ValueError(
+                f"snapshot digest scheme {scheme!r} is not {crud.DIGEST_SCHEME!r}:"
+                " its current_hash cannot be verified by this version"
+            )
         db = cls(spark, dim=manifest["dim"])
         db.iglyphs = spark.read.parquet(f"{path}/iglyphs")
         db.pglyphs = spark.read.parquet(f"{path}/pglyphs")
@@ -359,7 +394,8 @@ class VectorField:
         if "seq" in db._audit_loaded.columns:
             max_seq = db._audit_loaded.agg(F.max("seq")).collect()[0][0]
             db._audit_seq = int(max_seq) if max_seq is not None else 0
-        db.current_hash = db._digest()
+        db._lanes = db._full_lanes()
+        db.current_hash = crud.lthash_hex(db._lanes)
         if db.current_hash != manifest["current_hash"]:
             raise ValueError(
                 "snapshot digest mismatch: stored "

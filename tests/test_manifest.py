@@ -76,6 +76,24 @@ def test_merge_upsert_replaces_matched_appends_unmatched(spark, root):
     assert rows == {0: "old", 1: "old", 2: "old", 3: "new", 4: "new", 5: "new", 6: "new"}
 
 
+def test_merge_upsert_sizes_output_from_parent_bytes(spark, root):
+    """An upsert rewrites the snapshot in ~128 MB files sized from the
+    parent's bytes, not one file per scan split of the parent."""
+    import math
+
+    t = ManifestTable(root)
+    t.commit_overwrite(_df(spark, (0, 4000), tag="old").repartition(8))
+    parent = t.manifest()
+    assert t.read(spark).rdd.getNumPartitions() > 1  # a multi-split scan
+    parent_bytes = sum(os.path.getsize(os.path.join(root, f)) for f in parent["files"])
+    t.merge_upsert(spark, _df(spark, (3998, 4002), tag="new"), key="k")
+    m = t.manifest()
+    assert len(m["files"]) <= math.ceil(parent_bytes / (128 * 1024 * 1024))
+    rows = {r["k"]: r["tag"] for r in t.read(spark).collect()}
+    assert len(rows) == m["n_rows"] == 4002
+    assert rows[3997] == "old" and rows[3998] == rows[4001] == "new"
+
+
 def test_merge_upsert_on_empty_table(spark, root):
     t = ManifestTable(root)
     t.merge_upsert(spark, _df(spark, (0, 3)), key="k")

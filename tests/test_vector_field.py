@@ -322,3 +322,23 @@ def test_snapshot_load_detects_tamper(db, spark):
         json.dump(m, open(f"{d}/s/manifest.json", "w"))
         with pytest.raises(ValueError, match="digest mismatch"):
             VectorField.load_snapshot(spark, f"{d}/s")
+
+
+def test_snapshot_load_names_an_unknown_digest_scheme(db, spark):
+    """A manifest without this version's digest scheme (e.g. written by
+    an older version) is not reported as tampered: the error names the
+    scheme instead."""
+    db.add_iglyph(1, 0, emb())
+    with tempfile.TemporaryDirectory() as d:
+        db.snapshot(f"{d}/s")
+        m = json.load(open(f"{d}/s/manifest.json"))
+        assert m["digest"] == "lthash16-blake2b256"
+        for scheme in (None, "sha2-sorted"):
+            if scheme is None:
+                m.pop("digest")
+            else:
+                m["digest"] = scheme
+            json.dump(m, open(f"{d}/s/manifest.json", "w"))
+            with pytest.raises(ValueError, match="digest scheme") as err:
+                VectorField.load_snapshot(spark, f"{d}/s")
+            assert repr(scheme) in str(err.value) and "mismatch" not in str(err.value)

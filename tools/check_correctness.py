@@ -18,10 +18,13 @@ only visible in a sweep log).
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
@@ -107,7 +110,12 @@ def main() -> int:
     import __spark_entry__ as E
     from aeuc_vector_db_spark.session import get_spark
 
-    spark = get_spark("correctness-check")
+    # a throwaway warehouse: tables the queries save must not land in
+    # ./spark-warehouse, where a later run or the tests would find them
+    warehouse = tempfile.mkdtemp(prefix="check-correctness-warehouse-")
+    atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
+    spark = get_spark("correctness-check",
+                      extra_conf={"spark.sql.warehouse.dir": warehouse})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
