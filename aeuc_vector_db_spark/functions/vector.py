@@ -123,3 +123,31 @@ def let_col(value: Column, body) -> Column:
     are preserved.
     """
     return F.transform(F.array(value), body)[0]
+
+
+_BUILT: tuple[object, dict] = (None, {})
+
+
+def built_once(build, *args):
+    """`build(*args)`, built once per JVM and then reused.
+
+    For Column expressions that depend only on column names and
+    integers: building one costs a Python→JVM call per node, and the
+    text-feature and MinHash builders make hundreds of them (measured
+    0.7–0.9 s per `with_text_features` call on a 4-vCPU host). A Column
+    is an immutable, unresolved expression, resolved afresh in every
+    plan that uses it, so one instance serves any number of
+    DataFrames. The cache belongs to the current gateway's JVM view: a
+    new gateway (a new JVM) starts an empty cache."""
+    from pyspark import SparkContext
+
+    global _BUILT
+    jvm = SparkContext._jvm
+    owner, cache = _BUILT
+    if owner is not jvm:
+        cache = {}
+        _BUILT = (jvm, cache)
+    key = (build, args)
+    if key not in cache:
+        cache[key] = build(*args)
+    return cache[key]

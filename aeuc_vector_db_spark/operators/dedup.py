@@ -27,9 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aeuc_vector_db_spark.functions.vector import built_once
 from aeuc_vector_db_spark.operators.text import (
     jaccard_col,
     minhash_signature_col,
+    shingle_hash_batches,
     shingle_hashes_pandas,
 )
 
@@ -57,25 +59,40 @@ def shingle_sets(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    persist: bool = False,
 ) -> DataFrame:
-    """(id, sh) — distinct shingle-hash set per doc via the Arrow fast path.
+    """(id, sh) — distinct shingle-hash set per doc (empty for NULL text
+    and docs with fewer than `shingle_n` tokens), one Arrow kernel pass
+    per doc (`shingle_hash_batches`; its map stage binds the rows, so a
+    filter on `sh` does not re-run the kernel).
 
-    persist=False (default): fully lazy; a pipeline that reads the sets
-    twice (signature + verify) recomputes the shingle kernel twice.
-    That is the deliberate scale default — at corpus scale a cached
-    shingle-set table is itself corpus-sized (memory pressure and an
-    unpersist obligation), while the Arrow kernel is cheap to re-run.
-    persist=True opts in for small corpora; the CALLER owns the handle
-    and must unpersist after its final action."""
-    out = df.select(
-        F.col(id_col), shingle_hashes_pandas(shingle_n)(F.col(text_col)).alias("sh")
+    Lazy: every action re-runs the kernel. The MinHash operators read
+    the sets through `minhash_doc_index` under a lazy local checkpoint
+    instead, so each action shingles a doc once. Measured on a 4-vCPU
+    host, a `minhash_near_dup` pass so checkpointed took 1.6–2.0 s over
+    2k docs and 4.0–5.6 s over 20k, against 3.1–3.5 s and 13.4–14.7 s
+    recomputing the kernel per branch, for ~0.5 KB of index blocks per
+    doc, freed with the pass's frames."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    pairs = df.select(F.col(id_col), F.col(text_col))
+    schema = StructType(
+        [pairs.schema.fields[0], StructField("sh", ArrayType(LongType()))]
     )
-    if persist:
-        from pyspark import StorageLevel
+    return pairs.mapInArrow(shingle_hash_batches(shingle_n), schema)
 
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    return out
+
+def _band_structs(k: int, band_size: int) -> Column:
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.slice("sig", b * band_size + 1, band_size).alias("vals"),
+                )
+                for b in range(k // band_size)
+            ]
+        )
+    ).alias("bk")
 
 
 def _band_rows(
@@ -87,71 +104,78 @@ def _band_rows(
     access) — which is what makes the incremental path below cheap: a
     persisted (id, sig) index re-derives its band rows without ever
     touching the original documents."""
-    n_bands = k // band_size
-    return sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.slice("sig", b * band_size + 1, band_size).alias("vals"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.vals").alias("vals"))
+    return sigs.select(F.col(id_col), built_once(_band_structs, k, band_size)).select(
+        id_col, F.col("bk.band").alias("band"), F.col("bk.vals").alias("vals")
+    )
 
 
 def _candidates_from_sigs(
     sigs: DataFrame, id_col: str, k: int, band_size: int,
-    max_band_size: int | None = None,
+    max_band_size: int | None = None, new: DataFrame | None = None,
 ) -> DataFrame:
-    """Band-bucket self-join → candidate pairs.
+    """Band-bucket join → candidate pairs (a_id, b_id), a_id < b_id,
+    distinct: the candidate half of the one near-dup core that
+    `minhash_near_dup`, `minhash_candidates` and
+    `incremental_minhash_near_dup` share. `sigs` is the (id, sig) set
+    to match in; `new`, a subset of it, keeps only pairs with a side in
+    `new` (None: every pair).
 
     max_band_size bounds the hot-band hazard: a band bucket shared by n
     docs emits n(n−1)/2 pairs, so one boilerplate bucket (empty docs, a
     shared template) turns the join quadratic AND concentrates it on one
-    reducer. Buckets over the cap are dropped from pair generation — the
-    standard LSH treatment: a mega-bucket means near-identical
-    boilerplate, which exact_dedup already groups in O(n) by full-text
-    hash; pairwise verification inside it is quadratic work for no new
-    information. AQE skew-join (on in session.py) splits the residual
-    moderate skew. Default None = exact LSH semantics (oracle-checked
-    queries use None; scale pipelines set a cap).
+    reducer. Buckets over the cap (counted over all of `sigs`) are
+    dropped from pair generation — the standard LSH treatment: a
+    mega-bucket means near-identical boilerplate, which exact_dedup
+    already groups in O(n) by full-text hash; pairwise verification
+    inside it is quadratic work for no new information. AQE skew-join
+    (on in session.py) splits the residual moderate skew. Default None
+    = exact LSH semantics (oracle-checked queries use None; scale
+    pipelines set a cap).
 
     Optimization round 16 examined and REVERTED a groupBy(band, vals) +
-    collect_list + map-side pair-expansion form here (one evaluation of
-    the upstream signature subtree instead of two): measured
-    interleaved at sf0.1 it was noop-FLAT (the duplicated subtrees run
-    in parallel stages, so wall-clock doesn't shorten) and regressed
-    the hot re-collect 0.11 → 0.38 s — the post-aggregate candidate
-    set's size estimate flips it onto the BROADCAST side of the verify
-    joins, which pushes the corpus shingle kernel onto the streamed
-    final stage where every collect re-runs it. The self-join keeps
-    the candidate subtree streamed atop its materialized exchanges.
-    At 100 TB the answer to the duplicated text pass is not this
-    operator but the persisted (id, sig, sh) index + incremental serve
-    paths (`minhash_doc_index` / `incremental_minhash_near_dup`), which
-    never re-shingle the corpus at all.
+    collect_list + map-side pair-expansion form here. It existed to
+    evaluate the upstream signature subtree once instead of twice; the
+    callers now hand in a lazily checkpointed index, so both join sides
+    read the same stored blocks and that duplication is gone at its
+    source. The self-join also keeps the candidate subtree streamed
+    atop its exchanges (the aggregate form's small size estimate had
+    flipped it onto the broadcast side of the verify joins).
     """
     bands = _band_rows(sigs, id_col, k, band_size)
+    probe = bands if new is None else _band_rows(new, id_col, k, band_size)
     if max_band_size is not None:
-        w_cnt = (
+        keep = (
             bands.groupBy("band", "vals")
             .agg(F.count(F.lit(1)).alias("__bn__"))
             .filter(F.col("__bn__") <= max_band_size)
             .select("band", "vals")
         )
-        bands = bands.join(w_cnt, ["band", "vals"], "left_semi")
-    a = bands.select(F.col(id_col).alias("a_id"), "band", "vals")
-    b = bands.select(F.col(id_col).alias("b_id"), "band", "vals")
+        bands = bands.join(keep, ["band", "vals"], "left_semi")
+        probe = bands if new is None else probe.join(keep, ["band", "vals"], "left_semi")
+    x, y = F.col("x"), F.col("y")
     return (
-        a.join(b, ["band", "vals"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
+        probe.select(F.col(id_col).alias("x"), "band", "vals")
+        .join(bands.select(F.col(id_col).alias("y"), "band", "vals"), ["band", "vals"])
+        .filter(x < y if new is None else x != y)
+        .select(F.least(x, y).alias("a_id"), F.greatest(x, y).alias("b_id"))
         .distinct()
+    )
+
+
+def _verified(
+    pairs: DataFrame, index: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """(a_id, b_id, jaccard) — candidate pairs whose exact Jaccard over
+    the stored `sh` sets of `index` is ≥ threshold: the verify half of
+    the near-dup core. Only the candidate pairs are verified — never all
+    pairs."""
+    a_sets = index.select(F.col(id_col).alias("a_id"), F.col("sh").alias("a_sh"))
+    b_sets = index.select(F.col(id_col).alias("b_id"), F.col("sh").alias("b_sh"))
+    return (
+        pairs.join(a_sets, "a_id")
+        .join(b_sets, "b_id")
+        .select("a_id", "b_id", jaccard_col(F.col("a_sh"), F.col("b_sh")).alias("jaccard"))
+        .filter(F.col("jaccard") >= F.lit(threshold))
     )
 
 
@@ -168,12 +192,12 @@ def minhash_candidates(
 
     Output: (a_id, b_id) with a_id < b_id, distinct. The join key is
     (band_index, band signature values) — a real bucketed plan: the
-    corpus shuffles once on band keys, never crossJoins.
+    corpus shuffles once on band keys, never crossJoins. The (id, sig)
+    index is checkpointed lazily, so both join sides read one kernel
+    pass per action.
     """
-    sets_ = shingle_sets(df, id_col, text_col, shingle_n)
-    sigs = sets_.filter(F.size("sh") > 0).select(
-        F.col(id_col), minhash_signature_col(F.col("sh"), k).alias("sig")
-    )
+    sigs = minhash_doc_index(df, id_col, text_col, k, shingle_n).select(id_col, "sig")
+    sigs = sigs.localCheckpoint(eager=False)
     return _candidates_from_sigs(sigs, id_col, k, band_size, max_band_size)
 
 
@@ -190,25 +214,18 @@ def minhash_near_dup(
     """Full MinHash-LSH near-dup: candidates → exact shingle-set Jaccard
     verify ≥ threshold. Returns (a_id, b_id, jaccard).
 
-    Fully lazy: the shingle kernel is re-evaluated by the signature pass
-    and each verify join (recompute-over-persist — the scale default,
-    see shingle_sets); verification only touches the candidate pairs —
-    never all pairs. max_band_size: see _candidates_from_sigs (hot-band
-    cap for skewed corpora).
+    The (id, sig, sh) `minhash_doc_index` is built once and checkpointed
+    lazily: the band join reads its `sig`, the verify joins its `sh`,
+    and the shingle kernel runs once per doc per action. The blocks are
+    freed when the returned frame is garbage-collected. The candidate/verify core
+    is the one `incremental_minhash_near_dup` runs; this is its case
+    where every doc is new. max_band_size: see _candidates_from_sigs
+    (hot-band cap for skewed corpora).
     """
-    sets_ = shingle_sets(df, id_col, text_col, shingle_n)
-    sigs = sets_.filter(F.size("sh") > 0).select(
-        F.col(id_col), minhash_signature_col(F.col("sh"), k).alias("sig")
-    )
-    cands = _candidates_from_sigs(sigs, id_col, k, band_size, max_band_size)
-    a_sets = sets_.select(F.col(id_col).alias("a_id"), F.col("sh").alias("a_sh"))
-    b_sets = sets_.select(F.col(id_col).alias("b_id"), F.col("sh").alias("b_sh"))
-    return (
-        cands.join(a_sets, "a_id")
-        .join(b_sets, "b_id")
-        .select("a_id", "b_id", jaccard_col(F.col("a_sh"), F.col("b_sh")).alias("jaccard"))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
+    index = minhash_doc_index(df, id_col, text_col, k, shingle_n)
+    index = index.localCheckpoint(eager=False)
+    pairs = _candidates_from_sigs(index, id_col, k, band_size, max_band_size)
+    return _verified(pairs, index, id_col, threshold)
 
 
 def minhash_doc_index(
@@ -218,7 +235,8 @@ def minhash_doc_index(
     k: int = 8,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """(id, sig, sh) — the PERSISTABLE dedup-index row set (round 11).
+    """(id, sig, sh) — the PERSISTABLE dedup-index row set (round 11),
+    one row per doc with at least one shingle.
 
     The expensive part of MinHash dedup is the text pass (tokenize +
     shingle + hash); everything after is arithmetic over the stored
@@ -228,12 +246,11 @@ def minhash_doc_index(
     corpus's band rows derived MAP-SIDE from `sig` and its exact
     Jaccard verification served from `sh` — the corpus documents are
     never re-read, never re-shingled. Index size is O(corpus) in rows
-    but only the shingle-hash arrays in bytes (no text)."""
-    sets_ = shingle_sets(df, id_col, text_col, shingle_n)
-    return sets_.filter(F.size("sh") > 0).select(
-        F.col(id_col),
-        minhash_signature_col(F.col("sh"), k).alias("sig"),
-        F.col("sh"),
+    but only the shingle-hash arrays in bytes (no text). The kernel
+    runs once per doc: the empty-set filter reads the bound rows of
+    `shingle_sets`."""
+    return shingle_sets(df, id_col, text_col, shingle_n).filter(F.size("sh") > 0).select(
+        F.col(id_col), built_once(minhash_signature_col, "sh", k).alias("sig"), F.col("sh")
     )
 
 
@@ -267,9 +284,7 @@ def incremental_minhash_near_dup(
     guard as `_candidates_from_sigs`)."""
     # checkpoint (lazy) so the batch is shingled ONCE per action — the
     # plan references new_index from many branches (band rows, cap
-    # counts, both verification sides), and unmaterialized each branch
-    # re-ran the Arrow shingle kernel over the whole batch (round-12
-    # finding: 18 ArrowEvalPython nodes in the bucketed twin's plan)
+    # counts, both verification sides)
     new_index = minhash_doc_index(batch, id_col, text_col, k, shingle_n)
     new_index = new_index.localCheckpoint(eager=False)
     # re-ingest safety (round-12 ADVICE): a batch doc_id already present
@@ -284,38 +299,10 @@ def incremental_minhash_near_dup(
         .join(F.broadcast(batch_ids), id_col, "left_anti")
         .unionByName(new_index)
     )
-    nb = _band_rows(new_index.select(id_col, "sig"), id_col, k, band_size)
-    ab = _band_rows(all_idx.select(id_col, "sig"), id_col, k, band_size)
-    if max_band_size is not None:
-        keep = (
-            ab.groupBy("band", "vals")
-            .agg(F.count(F.lit(1)).alias("__bn__"))
-            .filter(F.col("__bn__") <= max_band_size)
-            .select("band", "vals")
-        )
-        ab = ab.join(keep, ["band", "vals"], "left_semi")
-        nb = nb.join(keep, ["band", "vals"], "left_semi")
-    pairs = (
-        nb.select(F.col(id_col).alias("x"), "band", "vals")
-        .join(ab.select(F.col(id_col).alias("y"), "band", "vals"), ["band", "vals"])
-        .filter(F.col("x") != F.col("y"))
-        .select(
-            F.least("x", "y").alias("a_id"),
-            F.greatest("x", "y").alias("b_id"),
-        )
-        .distinct()
+    pairs = _candidates_from_sigs(
+        all_idx, id_col, k, band_size, max_band_size, new=new_index
     )
-    a_sets = all_idx.select(F.col(id_col).alias("a_id"), F.col("sh").alias("a_sh"))
-    b_sets = all_idx.select(F.col(id_col).alias("b_id"), F.col("sh").alias("b_sh"))
-    return (
-        pairs.join(a_sets, "a_id")
-        .join(b_sets, "b_id")
-        .select(
-            "a_id", "b_id",
-            jaccard_col(F.col("a_sh"), F.col("b_sh")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
+    return _verified(pairs, all_idx, id_col, threshold)
 
 
 def minhash_band_rows_keyed(
@@ -688,17 +675,7 @@ def incremental_minhash_near_dup_bucketed(
         )
         .distinct()
     )
-    a_sets = all_verify.select(F.col(id_col).alias("a_id"), F.col("sh").alias("a_sh"))
-    b_sets = all_verify.select(F.col(id_col).alias("b_id"), F.col("sh").alias("b_sh"))
-    return (
-        pairs.join(a_sets, "a_id")
-        .join(b_sets, "b_id")
-        .select(
-            "a_id", "b_id",
-            jaccard_col(F.col("a_sh"), F.col("b_sh")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
+    return _verified(pairs, all_verify, id_col, threshold)
 
 
 def ngram_jaccard_pairs(

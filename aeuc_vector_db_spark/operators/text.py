@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from aeuc_vector_db_spark.functions.ranking import global_ranked_topk
 
-from aeuc_vector_db_spark.functions.vector import _c, let_col
+from aeuc_vector_db_spark.functions.vector import _c, built_once, let_col
 
 #: mod for the rolling hash — the Mersenne prime 2³¹ − 1.
 HASH_MOD = 2_147_483_647
@@ -179,28 +179,48 @@ def _py_polyhash(s: str) -> int:
     return h
 
 
+def _py_shingle_hashes(s: str | None, n: int) -> list[int]:
+    toks = _py_tokens(s)
+    return list({_py_polyhash(" ".join(toks[i : i + n])) for i in range(len(toks) - n + 1)})
+
+
 def shingle_hashes_pandas(n: int = 3):
     """Arrow-batched twin of shingle_hashes_col — identical values (integer
     arithmetic is exact on both paths; ord == ascii code point), ~100×
-    faster than the interpreted nested-HOF expression. The hot path for
-    the dedup operators; element order differs from the SQL form but all
-    consumers (array_min, array_intersect) are order-insensitive.
+    faster than the interpreted nested-HOF expression. Element order
+    differs from the SQL form but all consumers (array_min,
+    array_intersect) are order-insensitive. The dedup operators run the
+    same kernel as a `mapInArrow` stage (`shingle_hash_batches`).
     """
     from pyspark.sql.types import ArrayType, LongType
 
     @F.pandas_udf(ArrayType(LongType()))
     def f(texts: pd.Series) -> pd.Series:
-        out = []
-        for s in texts:
-            toks = _py_tokens(s)
-            hs = {
-                _py_polyhash(" ".join(toks[i : i + n]))
-                for i in range(len(toks) - n + 1)
-            }
-            out.append(list(hs))
-        return pd.Series(out)
+        return pd.Series([_py_shingle_hashes(s, n) for s in texts])
 
     return f
+
+
+def shingle_hash_batches(n: int = 3):
+    """`shingle_hashes_pandas`' kernel as a `mapInArrow` function: Arrow
+    batches of (id, text) in, (id, sh) out, same values.
+
+    A scalar UDF's output is an expression, and the optimizer copies an
+    expression into every filter it pushes below the projection that
+    names it: `size(sh) > 0` over the UDF column ran the kernel twice.
+    The rows of a map stage are bound: nothing is pushed through it, so
+    every consumer reads the one kernel pass."""
+    import pyarrow as pa
+
+    def run(batches):
+        for b in batches:
+            sh = [_py_shingle_hashes(s, n) for s in b.column(1).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), pa.array(sh, pa.list_(pa.int64()))],
+                names=[b.schema.names[0], "sh"],
+            )
+
+    return run
 
 
 def winnow_batch(texts: "pd.Series", k: int = 3, w: int = 4) -> "pd.DataFrame":
@@ -481,29 +501,31 @@ def quality_score_col(text: Column | str) -> Column:
           + 0.3·min(stopword_ratio/0.1, 1)
           + 0.3·(1 − |mean_len − 5| / 5, floored at 0)
     """
-    # token array let-bound: the score references it ~6 times (n appears
-    # in three terms, plus the stopword filter and the length fold) —
-    # unbound, each reference re-ran the tokenize
-    def body(t: Column) -> Column:
-        n = F.size(t).cast("double")  # O(1) on the bound array variable
-        sw = F.array(*[F.lit(w) for w in STOPWORDS])
-        sw_ratio = (
-            F.size(F.filter(t, lambda x: F.array_contains(sw, x))).cast("double") / n
-        )
-        total_len = F.aggregate(
-            t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x).cast("long")
-        )
-        mean_len = total_len.cast("double") / n
-        len_term = F.greatest(
-            F.lit(0.0), F.lit(1.0) - F.abs(mean_len - F.lit(5.0)) / F.lit(5.0)
-        )
-        return (
-            F.lit(0.4) * F.least(n / F.lit(100.0), F.lit(1.0))
-            + F.lit(0.3) * F.least(sw_ratio / F.lit(0.1), F.lit(1.0))
-            + F.lit(0.3) * len_term
-        )
+    return let_col(tokens_col(text), _quality_of_tokens)
 
-    return let_col(tokens_col(text), body)
+
+def _quality_of_tokens(t: Column) -> Column:
+    """quality_score_col's score over a token array. Callers let-bind
+    `t`: the score references it ~6 times (n appears in three terms,
+    plus the stopword filter and the length fold), and each unbound
+    reference re-ran the tokenize."""
+    n = F.size(t).cast("double")  # O(1) on the bound array variable
+    sw = F.array(*[F.lit(w) for w in STOPWORDS])
+    sw_ratio = (
+        F.size(F.filter(t, lambda x: F.array_contains(sw, x))).cast("double") / n
+    )
+    total_len = F.aggregate(
+        t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x).cast("long")
+    )
+    mean_len = total_len.cast("double") / n
+    len_term = F.greatest(
+        F.lit(0.0), F.lit(1.0) - F.abs(mean_len - F.lit(5.0)) / F.lit(5.0)
+    )
+    return (
+        F.lit(0.4) * F.least(n / F.lit(100.0), F.lit(1.0))
+        + F.lit(0.3) * F.least(sw_ratio / F.lit(0.1), F.lit(1.0))
+        + F.lit(0.3) * len_term
+    )
 
 
 def token_count_bpe_ish(text: Column | str) -> Column:
@@ -552,16 +574,28 @@ def token_stats_pandas():
     return f
 
 
+def _feature_columns(text_col: str) -> tuple[Column, dict[str, Column]]:
+    """(tokens, {n_tokens, quality, lang_pred, fingerprint} over `tokens`)."""
+    return tokens_col(text_col), {
+        "n_tokens": F.size("tokens").cast("long"),
+        "quality": let_col(F.col("tokens"), _quality_of_tokens),
+        "lang_pred": language_id_col("tokens"),
+        "fingerprint": polyhash_col(F.concat_ws(" ", F.col("tokens"))),
+    }
+
+
 def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach the standard feature columns to a documents df."""
-    t = tokens_col(text_col)
-    return (
-        df.withColumn("tokens", t)
-        .withColumn("n_tokens", F.size("tokens").cast("long"))
-        .withColumn("quality", quality_score_col(text_col))
-        .withColumn("lang_pred", language_id_col("tokens"))
-        .withColumn("fingerprint", polyhash_col(F.concat_ws(" ", F.col("tokens"))))
-    )
+    """Attach the standard feature columns to a documents df: tokens,
+    n_tokens, quality, lang_pred, fingerprint.
+
+    The expressions depend only on `text_col`, so they are built once
+    per JVM (`built_once`) and each call only applies them; building
+    them took 0.7–0.9 s of Python→JVM calls per call, most of it for
+    columns callers then prune. Two projections, not one: the four
+    derived columns read the bound `tokens` column, so a document is
+    tokenized once for them however many of them a caller reads."""
+    tokens, derived = built_once(_feature_columns, text_col)
+    return df.withColumn("tokens", tokens).withColumns(derived)
 
 
 def unigram_logprob(

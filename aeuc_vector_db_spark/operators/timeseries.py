@@ -202,6 +202,9 @@ def cusum_alarms(
     bit-identical — pinned by tests/test_timeseries.py and the
     recursive-CTE DuckDB oracle of `events_cusum_alarms`.
 
+    A NULL `value_col` fails the query with an error
+    naming the column, rather than resetting the state.
+
     Returns (key_col, n_events LONG, n_alarms LONG, first_alarm_id
     LONG?) — one row per group, `first_alarm_id` = `id_col` of the
     first alarming event (NULL when no alarm fired).
@@ -211,9 +214,15 @@ def cusum_alarms(
     kl = F.lit(int(k)).cast("long")
     hl = F.lit(int(h)).cast("long")
 
+    # a NULL value would make `s + v` NULL and greatest() then 0: a
+    # silent state reset mid-stream. It fails the query instead.
+    v = F.col(value_col).cast("long")
     ev = F.struct(
         *[F.col(c) for c in order_cols],
-        F.col(value_col).cast("long").alias("__v__"),
+        F.when(
+            v.isNull(),
+            F.raise_error(F.lit(f"cusum_alarms: NULL {value_col} in an event")),
+        ).otherwise(v).alias("__v__"),
         F.col(id_col).cast("long").alias("__id__"),
     )
 

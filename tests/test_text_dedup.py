@@ -864,3 +864,201 @@ def test_incremental_minhash_reingest_batch_wins(spark):
     assert got == want
     assert (1, 10) in {(a, b) for a, b, _ in got}
 
+
+
+# --- one shingle pass, one near-dup core, expressions built once ------
+
+_K, _BAND, _N = 8, 2, 3
+
+
+def _py_sets(texts):
+    """Shingle-hash sets, brute force in Python (the kernel's oracle)."""
+    out = {}
+    for i, s in texts.items():
+        toks = TX._py_tokens(s)
+        out[i] = {
+            TX._py_polyhash(" ".join(toks[j : j + _N]))
+            for j in range(len(toks) - _N + 1)
+        }
+    return out
+
+
+def _py_lsh(texts, threshold, touching=None):
+    """(candidates, verified {(a, b): jaccard}) by brute force: every
+    pair sharing a MinHash band, then exact Jaccard over the sets."""
+    sets = {i: s for i, s in _py_sets(texts).items() if s}
+    sig = {
+        i: [min((a * h + b) % TX.HASH_MOD for h in s) for a, b in TX.MINHASH_COEFFS[:_K]]
+        for i, s in sets.items()
+    }
+    cands, pairs = set(), {}
+    for a in sets:
+        for b in sets:
+            if a >= b or (touching is not None and not ({a, b} & touching)):
+                continue
+            if any(
+                sig[a][j : j + _BAND] == sig[b][j : j + _BAND] for j in range(0, _K, _BAND)
+            ):
+                cands.add((a, b))
+                jac = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+                if jac >= threshold:
+                    pairs[(a, b)] = jac
+    return cands, pairs
+
+
+@pytest.fixture(scope="module")
+def dirty_corpus(spark):
+    base = [
+        "the quick brown fox jumps over the lazy dog near the river bank",
+        "spark engines shuffle rows between stages by hashing their keys",
+        "a minhash signature keeps the minimum of each hash over the set",
+        "documents with planted edits share most of their word shingles",
+        "locality sensitive hashing buckets similar items into one band",
+    ]
+    texts = {i: t for i, t in enumerate(base)}
+    texts[10] = base[0]  # exact copy
+    texts[11] = base[1]  # exact copy
+    texts[20] = base[0].replace("lazy", "sleepy")  # planted near-dups
+    texts[21] = base[2].replace("minimum", "least").replace("set", "bag")
+    texts[22] = base[3] + " again"
+    texts[30] = None  # NULL text
+    texts[31] = ""  # empty text
+    texts[32] = "two words"  # fewer than n tokens
+    texts[33] = "!!! ???"  # no tokens at all
+    df = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+    return texts, df.repartition(3)
+
+
+def test_near_dup_matches_python_brute_force(dirty_corpus):
+    texts, df = dirty_corpus
+    want_cands, want = _py_lsh(texts, 0.3)
+    got = {(r["a_id"], r["b_id"]): r["jaccard"] for r in D.minhash_near_dup(df, threshold=0.3).collect()}
+    assert got == want and (0, 10) in got and (0, 20) in got
+    cands = {(r["a_id"], r["b_id"]) for r in D.minhash_candidates(df).collect()}
+    assert cands == want_cands
+
+
+def test_incremental_near_dup_matches_python_brute_force(dirty_corpus):
+    texts, df = dirty_corpus
+    batch_ids = {10, 20, 21, 30, 32}
+    is_batch = F.col("doc_id").isin(sorted(batch_ids))
+    index = D.minhash_doc_index(df.filter(~is_batch)).localCheckpoint(eager=True)
+    got = D.incremental_minhash_near_dup(df.filter(is_batch), index, threshold=0.3)
+    _, want = _py_lsh(texts, 0.3, touching=batch_ids)
+    assert {(r["a_id"], r["b_id"]): r["jaccard"] for r in got.collect()} == want
+
+
+def test_shingle_kernel_runs_once_per_doc_per_action(spark, dirty_corpus, job_group, monkeypatch):
+    """minhash_near_dup, minhash_candidates and the incremental path
+    each shingle a document once per action: the kernel is counted
+    by an accumulator over the rows its Arrow batches carry."""
+    texts, df = dirty_corpus
+    seen = spark.sparkContext.accumulator(0)
+    kernel = TX.shingle_hash_batches
+
+    def counted(n):
+        inner = kernel(n)
+
+        def run(batches):
+            for b in batches:
+                seen.add(b.num_rows)
+                yield from inner([b])
+
+        return run
+
+    batch_ids = [10, 20, 21, 30, 32]
+    is_batch = F.col("doc_id").isin(batch_ids)
+    index = D.minhash_doc_index(df.filter(~is_batch)).localCheckpoint(eager=True)
+    monkeypatch.setattr(D, "shingle_hash_batches", counted)
+    runs = {
+        "near_dup": (lambda: D.minhash_near_dup(df, threshold=0.3), len(texts)),
+        "candidates": (lambda: D.minhash_candidates(df), len(texts)),
+        "incremental": (
+            lambda: D.incremental_minhash_near_dup(df.filter(is_batch), index, threshold=0.3),
+            len(batch_ids),
+        ),
+    }
+    for name, (build, n_docs) in runs.items():
+        seen.value = 0
+        out = build()
+        jobs, stages = job_group(f"kernel-once-{name}", out.collect)
+        assert jobs and stages
+        assert seen.value == n_docs, (name, seen.value, n_docs)
+
+
+def _fresh_features(df):
+    """with_text_features as five freshly built withColumn steps."""
+    return (
+        df.withColumn("tokens", TX.tokens_col("text"))
+        .withColumn("n_tokens", F.size("tokens").cast("long"))
+        .withColumn("quality", TX.quality_score_col("text"))
+        .withColumn("lang_pred", TX.language_id_col("tokens"))
+        .withColumn("fingerprint", TX.polyhash_col(F.concat_ws(" ", F.col("tokens"))))
+    )
+
+
+def test_reused_text_features_match_fresh_build(dirty_corpus):
+    _, df = dirty_corpus
+    # quality divides by the token count, which fails a query over a
+    # doc with no tokens (31, 33) on both builds; the rest covers them
+    rest = [c for c in _fresh_features(df).columns if c != "quality"]
+    assert sorted(TX.with_text_features(df).select(rest).collect()) == sorted(
+        _fresh_features(df).select(rest).collect()
+    )
+    df = df.filter(~F.col("doc_id").isin(31, 33))
+    lo, hi = df.filter("doc_id < 20"), df.filter("doc_id >= 20")
+    for got, src in (
+        (TX.with_text_features(df), df),
+        (TX.with_text_features(lo).unionByName(TX.with_text_features(hi)), df),
+        (TX.with_text_features(lo), lo),
+    ):
+        want = _fresh_features(src)
+        assert got.columns == want.columns
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_text_features_built_once(dirty_corpus, monkeypatch):
+    from aeuc_vector_db_spark.functions.vector import built_once
+
+    _, df = dirty_corpus
+    TX.with_text_features(df)
+    first = built_once(TX._feature_columns, "text")
+    # a second build must not construct any expression again
+    monkeypatch.setattr(TX, "language_id_col", None)
+    monkeypatch.setattr(TX, "tokens_col", None)
+    again = TX.with_text_features(df)
+    assert built_once(TX._feature_columns, "text") is first
+    assert again.columns == df.columns + [
+        "tokens", "n_tokens", "quality", "lang_pred", "fingerprint"
+    ]
+
+
+def test_near_dup_index_blocks_are_freed(spark, dirty_corpus):
+    """Each pass checkpoints its index into the block manager; the
+    blocks go with the pass's frames, so 20 passes leave at most one
+    pass's index behind once both sides have collected garbage."""
+    import gc
+    import time
+
+    _, df = dirty_corpus
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    for _ in range(20):
+        out = D.minhash_near_dup(df, threshold=0.3)
+        out.collect()
+    peak = cached_rdds() - before
+    assert peak
+    del out
+    deadline = time.time() + 60
+    while True:
+        gc.collect()
+        sc._jvm.System.gc()
+        left = cached_rdds() - before
+        if len(left) <= 1 or time.time() > deadline:
+            break
+        time.sleep(0.5)
+    assert len(left) <= 1, (len(peak), len(left))

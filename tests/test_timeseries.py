@@ -192,3 +192,16 @@ def test_cusum_alarms_non_integral_group_key(spark):
     got = {r["src"]: (r["n_events"], r["n_alarms"], r["first_alarm_id"])
            for r in out.collect()}
     assert got == {"a": (6, 1, 3), "b": (4, 0, None)}
+
+
+def test_cusum_alarms_null_value_fails_loudly(spark):
+    """A NULL value must not reset the CUSUM state silently (`s + NULL`
+    is NULL and greatest() would turn it into 0): the query fails with
+    an error naming the column."""
+    from aeuc_vector_db_spark.operators.timeseries import cusum_alarms
+
+    rows = [(1, 0, 0, 30), (1, 1, 1, None), (1, 2, 2, 30)]
+    df = spark.createDataFrame(rows, "user_id long, t long, eid long, v long")
+    out = cusum_alarms(df, "user_id", ("t", "eid"), "v", "eid", k=10, h=25)
+    with pytest.raises(Exception, match="cusum_alarms: NULL v"):
+        out.collect()

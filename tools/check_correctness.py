@@ -31,7 +31,8 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
@@ -259,7 +260,9 @@ def main() -> int:
             print(f"ok    {name}  ({sn} rows, {time.time()-t0:.1f}s)")
     print(f"\n{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
     if not only:  # full sweep: persist the timing profile (spark side only)
-        out = os.environ.get("CHECK_TIMINGS_OUT", "/root/repo/SWEEP_TIMINGS.json")
+        out = os.environ.get(
+            "CHECK_TIMINGS_OUT", os.path.join(REPO_ROOT, "SWEEP_TIMINGS.json")
+        )
         with open(out, "w") as fh:
             json.dump(
                 {

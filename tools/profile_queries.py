@@ -18,7 +18,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 SF_DIR = os.environ.get("PROFILE_SF_DIR", "/root/testdata/sf0.1")
 

@@ -35,10 +35,12 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 

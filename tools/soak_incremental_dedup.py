@@ -20,10 +20,12 @@ Prints JSON lines; result goes to PLANS.md.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -25,10 +25,12 @@ PLANS.md (round-11 soak entry).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
