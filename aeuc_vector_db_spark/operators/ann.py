@@ -6,7 +6,7 @@ to IVF: a trained coarse quantizer (KMeans centroids = learned PGlyphs),
 the corpus stored partitioned by centroid id, and search that reads only
 the nprobe best partitions.
 
-Three layers:
+Layers:
 - build_ivf_index / assign_centroids — KMeans fit (MLlib, fixed seed) and
   centroid assignment. The distributed generalization of
   auto_cluster_phi (reference clustering.py:42-79).
@@ -16,17 +16,21 @@ Three layers:
   reads only nprobe/k of its files. This is the piece that makes
   "pruned" honest: without partitioned storage the scan still touches
   every file.
-- ivf_search_batch — coarse scoring against the (tiny, broadcast)
-  centroid table picks nprobe cells per query; the fine scan is an
+- ivf_search_batch — coarse_probe (a broadcast crossJoin + Window over
+  the centroid table) picks nprobe cells per query; the fine scan is an
   ordinary exact batch k-NN over the pruned corpus. The SQL form, kept
   as the oracle twin.
-- ivf_search_batch_arrow — the form to run: the coarse probe in NumPy
-  on the driver over the collected queries and centroids, then the
-  Arrow kernel over the partition-pruned scan with a per-query cell
-  mask, and one SinglePartition exchange into a single merge task (no
-  Window, no orderBy).
-- recall_at_k — evaluation against exact search (the accuracy/cost knob
-  is nprobe; recall=1.0 when nprobe=k).
+- Every other search has one shape. `_probe_cells` is the one coarse
+  probe: NumPy on the driver over the collected queries and centroids.
+  `search.arrow_topk` is the one scan: an Arrow kernel over the
+  partition-pruned corpus with a per-query cell mask, then one
+  SinglePartition merge task (no Window, no orderBy). The exact
+  IVF search (ivf_search_batch_arrow) scores with `score_block`; the
+  PQ searches (pq_search_batch, ivfadc_search_batch/_disk) score with
+  an ADC lookup-table gather.
+- recall_eval — recall@k of any of them against the exact Arrow top-k
+  (the accuracy/cost knobs are nprobe and the PQ (m, nbits); recall=1.0
+  when nprobe=k).
 
 MLlib's BucketedRandomProjectionLSH / MinHashLSH cover the same need
 with hash families instead of trained centroids; see
@@ -416,9 +420,77 @@ def recall_at_k(
     )
 
 
+def recall_eval(
+    approx: "DataFrame | list[DataFrame]",
+    corpus: DataFrame,
+    queries: "DataFrame | QueryBatch",
+    top_k: int = 10,
+    metric: str = "cosine",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_embedding",
+) -> "DataFrame | list[DataFrame]":
+    """recall@k of approximate search results against exact search:
+    the exact top-k is `knn_search_batch_arrow` over `corpus` (the
+    NumPy kernel), then `recall_at_k` per query. Returns (query_id,
+    recall). `queries` is a DataFrame or a collected QueryBatch.
+
+    `approx` may be a list of result frames — e.g. plain ADC and its
+    ADC+R refinement — which are all scored against ONE exact
+    baseline; a list of recall frames comes back in the same order.
+    Each search family's train → encode → search steps live in its
+    declared query (queries/ann.py); this is only the comparison."""
+    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
+
+    exact = knn_search_batch_arrow(
+        corpus, queries, top_k=top_k, metric=metric, id_col=id_col,
+        vec_col=vec_col, query_id_col=query_id_col, query_vec_col=query_vec_col,
+    ).select(query_id_col, id_col)
+    if isinstance(approx, DataFrame):
+        return recall_at_k(approx, exact, query_id_col, id_col)
+    return [recall_at_k(a, exact, query_id_col, id_col) for a in approx]
+
+
+def _probe_cells(
+    corpus_with_cells: DataFrame,
+    centroids,
+    queries: DataFrame,
+    nprobe: int,
+    metric: str,
+    cell_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+):
+    """The driver-side coarse probe every IVF path runs: (queries,
+    query_cells, pruned).
+
+    The queries and the centroids are collected once each
+    (`collect_queries`, `_local_centroids`; a NULL or wrong-dimension
+    one raises a ValueError naming it), and `score_block` — the fine
+    scan's own scorer — picks each query's nprobe cells in coarse_probe's
+    order (score DESC, centroid_id ASC): k·Q scores need no Spark job.
+    `query_cells` maps each query id to its cells; `pruned` is the
+    corpus filtered to their union (PartitionFilters on cell-partitioned
+    storage)."""
+    import numpy as np
+
+    from aeuc_vector_db_spark.operators.search import collect_queries, score_block
+
+    cids, cmat = _local_centroids(centroids)
+    qb = collect_queries(queries, query_id_col, query_vec_col, dim=cmat.shape[1])
+    scores = score_block(cmat, qb.mat, metric)  # (k, Q)
+    query_cells: dict = {}
+    for j, qid in enumerate(qb.ids):
+        best = cids[np.lexsort((cids, -scores[:, j]))[:nprobe]]
+        query_cells.setdefault(qid, set()).update(best.tolist())
+    union = sorted({c for cs in query_cells.values() for c in cs})
+    return qb, query_cells, corpus_with_cells.filter(F.col(cell_col).isin(union))
+
+
 def ivf_search_batch_arrow(
     corpus_with_cells: DataFrame,
-    centroids: DataFrame,
+    centroids: "DataFrame | list[tuple[int, list[float]]]",
     queries: DataFrame,
     top_k: int = 10,
     nprobe: int = 4,
@@ -435,17 +507,11 @@ def ivf_search_batch_arrow(
     queries × nprobe=4/64 cells at N=1M, while the Arrow FULL scan of
     all 1M rows took 4.7 s — pruning that drops into the interpreted
     path costs 10× more CPU than it saves IO. This composes the two
-    properly:
-    - the queries and the centroids are collected once each, and the
-      coarse probe runs on the driver in NumPy (`score_block`, the fine
-      scan's own scorer) with coarse_probe's order (score DESC,
-      centroid_id ASC) — k·Q scores need no Spark job;
-    - the scan is filtered to the UNION of probed cells
-      (PartitionFilters on ivf-partitioned storage — the IO win stands);
-    - the fine scan is knn_search_batch_arrow over the pruned scan,
-      handed the collected queries: the NumPy-matmul kernel with a
-      per-query cell mask, so each query still ranks exactly its own
-      probed cells, then one single-partition merge.
+    properly: the driver probe (`_probe_cells`) picks each query's
+    cells and filters the scan to their union, then
+    knn_search_batch_arrow runs over the pruned scan with the collected
+    queries and a per-query cell mask, so each query still ranks
+    exactly its own probed cells, then one single-partition merge.
 
     Same results rank-for-rank as ivf_search_batch (scores differ in
     low-order bits, np.dot pairwise summation — the knn_search_batch
@@ -454,24 +520,13 @@ def ivf_search_batch_arrow(
     returns. A NULL or wrong-dimension query or centroid raises a
     ValueError naming it.
     """
-    import numpy as np
+    from aeuc_vector_db_spark.operators import search
 
-    from aeuc_vector_db_spark.operators.search import (
-        collect_queries,
-        knn_search_batch_arrow,
-        score_block,
+    qb, query_cells, pruned = _probe_cells(
+        corpus_with_cells, centroids, queries, nprobe, metric, "centroid_id",
+        query_id_col, query_vec_col,
     )
-
-    cids, cmat = _local_centroids(centroids)
-    qb = collect_queries(queries, query_id_col, query_vec_col, dim=cmat.shape[1])
-    scores = score_block(cmat, qb.mat, metric)  # (k, Q)
-    query_cells: dict = {}
-    for j, qid in enumerate(qb.ids):
-        best = cids[np.lexsort((cids, -scores[:, j]))[:nprobe]]
-        query_cells.setdefault(qid, set()).update(best.tolist())
-    union = sorted({c for cs in query_cells.values() for c in cs})
-    pruned = corpus_with_cells.filter(F.col("centroid_id").isin(union))
-    return knn_search_batch_arrow(
+    return search.knn_search_batch_arrow(
         pruned,
         qb,
         top_k=top_k,
@@ -483,58 +538,6 @@ def ivf_search_batch_arrow(
         cell_col="centroid_id",
         query_cells=query_cells,
     )
-
-
-def ivf_recall_eval_arrow(
-    corpus_with_cells: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    top_k: int = 10,
-    nprobe: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
-) -> DataFrame:
-    """Arrow twin of `ivf_recall_eval`: exact baseline = full Arrow
-    scan, IVF branch = `ivf_search_batch_arrow` (same coarse probe).
-
-    Two scans instead of the shared-scored-table form — but each pair
-    scores in the NumPy matmul kernel, ~100× cheaper than the
-    interpreted HOF fold, so two cheap passes beat one expensive
-    shared pass. Determinism: per-pair Arrow scores are
-    row-independent (a row's score never depends on batch
-    composition, so any partitioning gives the same score), and ranks
-    agree with the SQL twin (test-pinned), so the recall values are
-    identical to `ivf_recall_eval`'s — asserted in test_ann.py. The
-    SQL form remains the cross-engine-parity tool; this is the one to
-    run."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
-    exact = knn_search_batch_arrow(
-        corpus_with_cells,
-        queries,
-        top_k=top_k,
-        metric=metric,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-    ).select(query_id_col, id_col)
-    approx = ivf_search_batch_arrow(
-        corpus_with_cells,
-        centroids,
-        queries,
-        top_k=top_k,
-        nprobe=nprobe,
-        metric=metric,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-    ).select(query_id_col, id_col)
-    return recall_at_k(approx, exact, query_id_col, id_col)
 
 
 def _range_prune(
@@ -803,69 +806,6 @@ def probed_cells(
     return kept.select("query_id", "centroid_id")
 
 
-def ivf_recall_eval(
-    corpus_with_cells: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    top_k: int = 10,
-    nprobe: int = 4,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
-) -> DataFrame:
-    """recall@k of IVF search vs exact search, from ONE scored scan.
-
-    Recall evaluation inherently pays a full exact scan for the
-    baseline, so running ivf_search_batch separately would score every
-    probed (query, vector) pair a second time. Here every pair is
-    scored once; the exact top-k ranks over all pairs and the IVF
-    top-k ranks over the pairs whose centroid_id the coarse probe
-    selected — the same (score DESC, id ASC) total order
-    ivf_search_batch uses, so the sets are identical to running the
-    production path. Returns (query_id, recall).
-
-    Evaluation tool only: the production search path stays
-    ivf_search_batch, which never scores unprobed cells.
-    """
-    cells = coarse_probe(
-        centroids, queries, nprobe, metric, query_id_col, query_vec_col
-    )
-    q = queries.select(F.col(query_id_col), as_double(query_vec_col).alias("__qv__"))
-    scored = corpus_with_cells.crossJoin(F.broadcast(q)).select(
-        query_id_col,
-        id_col,
-        "centroid_id",
-        similarity_col(as_double(vec_col), F.col("__qv__"), metric).alias("__s__"),
-    )
-    # The exact and approx branches are separate plan subtrees — without
-    # materialization Catalyst recomputes the full N·Q scoring once per
-    # branch (ReusedExchange can't dedupe across the differing exchange
-    # children), which would be WORSE than the two-pass form this
-    # replaces. A lazy localCheckpoint computes the skinny (qid, id,
-    # cell, score) table once on first use and serves both branches;
-    # blocks are released when the RDD is garbage-collected. N·Q skinny
-    # rows is the evaluation job's inherent footprint (the exact
-    # baseline needs them all) — bound Q, not the corpus.
-    scored = scored.localCheckpoint(eager=False)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__s__").desc(), F.col(id_col).asc()
-    )
-    exact = (
-        scored.withColumn("__r__", F.row_number().over(w))
-        .filter(F.col("__r__") <= top_k)
-        .select(query_id_col, id_col)
-    )
-    approx = (
-        scored.join(F.broadcast(cells), [query_id_col, "centroid_id"])
-        .withColumn("__r__", F.row_number().over(w))
-        .filter(F.col("__r__") <= top_k)
-        .select(query_id_col, id_col)
-    )
-    return recall_at_k(approx, exact, query_id_col, id_col)
-
-
 def lsh_bucket_assignments(
     corpus: DataFrame,
     bucket_length: float = 2.0,
@@ -1111,7 +1051,7 @@ def pq_encode(
 def pq_search_batch(
     codes_df: DataFrame,
     codebooks: "list[list[list[float]]]",
-    queries: DataFrame,
+    queries: "DataFrame | QueryBatch",
     top_k: int = 10,
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
@@ -1129,29 +1069,35 @@ def pq_search_batch(
     When every subvector coincides with a codebook centroid the ADC
     distance is EXACT, which is the correctness pin in test_ann.py.
 
-    The codes never shuffle (mapInPandas partial top-k per partition,
-    then a global rank over Q·top_k·partitions finalist rows) — the
-    knn_search_batch_arrow shape in the compressed domain. Queries are
-    collected (bounded: Q·d floats), the codebook rides in the closure.
+    The scan is `search.arrow_topk`, the exact k-NN's own kernel, with
+    the table gather as its scorer: the codes never shuffle, each
+    partition keeps a tie-aware top-k per query (PQ makes exact score
+    ties common — rows sharing codes score identically), and one task
+    merges. `queries` is a DataFrame, collected once by
+    `collect_queries` (a NULL or wrong-dimension query raises a
+    ValueError naming it), or a QueryBatch a caller already collected.
+    The codebook rides in the closure.
     """
     import numpy as np
-    import pandas as pd
+
+    from aeuc_vector_db_spark.operators.search import (
+        QueryBatch,
+        arrow_topk,
+        collect_queries,
+    )
 
     cb = np.asarray(codebooks, dtype=np.float64)  # (m, ksub, dsub)
     m, ksub, dsub = cb.shape
-    q_rows = sorted(
-        queries.select(
-            F.col(query_id_col), as_double(query_vec_col).alias("__qv__")
-        ).collect(),
-        key=lambda r: r[query_id_col],
+    qb = (
+        queries
+        if isinstance(queries, QueryBatch)
+        else collect_queries(queries, query_id_col, query_vec_col, dim=m * dsub)
     )
-    qids = [r[query_id_col] for r in q_rows]
-    qmat = np.asarray([list(r["__qv__"]) for r in q_rows], dtype=np.float64)
-    if qmat.shape[1] != m * dsub:
+    if qb.mat.shape[1] != m * dsub:
         raise ValueError(
-            f"query dim {qmat.shape[1]} != codebook dim {m * dsub}"
+            f"query dim {qb.mat.shape[1]} != codebook dim {m * dsub}"
         )
-    qsub = qmat.reshape(len(qids), m, dsub)
+    qsub = qb.mat.reshape(len(qb.ids), m, dsub)
     # (Q, m, ksub) exact subspace distance tables, computed once
     luts = (
         (cb * cb).sum(axis=2)[None, :, :]
@@ -1160,120 +1106,19 @@ def pq_search_batch(
     )
     rows_idx = np.arange(m)
 
-    # derive id types from the input schemas (mirrors
-    # knn_search_batch_arrow, search.py:211) — hard-coding `long` would
-    # fail or miscast string / int32 ids at runtime
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    id_type = codes_df.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{query_id_col} {qid_type}, {id_col} {id_type}, score double"
-    )
+    def adc(code_lists):
+        codes = np.asarray(code_lists, dtype=np.int64)  # (B, m)
+        out = np.empty((len(codes), len(luts)))
+        for qi, lut in enumerate(luts):
+            d2 = lut[rows_idx[:, None], codes.T].sum(axis=0)  # (B,)
+            out[:, qi] = 1.0 / (1.0 + np.sqrt(np.maximum(d2, 0.0)))
+        return out
 
-    allowed = (
-        {qid: np.asarray(sorted(cs)) for qid, cs in query_cells.items()}
-        if query_cells is not None
-        else None
+    return arrow_topk(
+        codes_df, qb, adc, width=m, top_k=top_k, id_col=id_col,
+        vec_col="codes", query_id_col=query_id_col,
+        cell_col=cell_col, query_cells=query_cells,
     )
-
-    def scan(batches):
-        for pdf in batches:
-            # np.asarray over the python list: string ids become '<U'
-            # dtype (lexsort-able), where .to_numpy() would yield object
-            ids = np.asarray(pdf[id_col].tolist())
-            code_lists = pdf["codes"].tolist()
-            ok = np.array(
-                [c is not None and len(c) == m for c in code_lists], dtype=bool
-            )
-            if not ok.any():
-                continue
-            ids = ids[ok]
-            cells_arr = (
-                pdf[cell_col].to_numpy()[ok] if allowed is not None else None
-            )
-            codes = np.asarray(
-                [code_lists[i] for i in np.flatnonzero(ok)], dtype=np.int64
-            )  # (B, m)
-            parts = []
-            for qi, qid in enumerate(qids):
-                if cells_arr is not None:
-                    # IVFADC mask: this query ranks only rows whose cell
-                    # its coarse probe selected
-                    vi = np.flatnonzero(
-                        np.isin(cells_arr, allowed.get(qid, ()))
-                    )
-                    if vi.size == 0:
-                        continue
-                    q_codes, q_ids = codes[vi], ids[vi]
-                else:
-                    q_codes, q_ids = codes, ids
-                d2 = luts[qi][rows_idx[:, None], q_codes.T].sum(axis=0)  # (B,)
-                s = 1.0 / (1.0 + np.sqrt(np.maximum(d2, 0.0)))
-                # tie-aware per-partition cut (mirrors search.py:270): PQ
-                # makes exact score ties COMMON (rows sharing codes score
-                # identically), and a bare argpartition would slice
-                # arbitrarily through the tied boundary — dropping the
-                # lowest-id tied row the (score DESC, id ASC) contract
-                # keeps, varying with partitioning
-                cand = np.lexsort((q_ids, -s))[: min(top_k, len(s))]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            query_id_col: qid,
-                            id_col: q_ids[cand],
-                            "score": s[cand],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    sel = [id_col, "codes"] + ([cell_col] if allowed is not None else [])
-    finalists = codes_df.select(*sel).mapInPandas(scan, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        finalists.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .orderBy(query_id_col, "rank")
-    )
-
-
-def pq_recall_eval(
-    corpus: DataFrame,
-    queries: DataFrame,
-    m: int = 8,
-    nbits: int = 4,
-    top_k: int = 10,
-    seed: int = 42,
-    sample_mod: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
-) -> DataFrame:
-    """recall@k of compressed-domain ADC search vs exact euclidean
-    search: train → encode → ADC top-k, exact Arrow top-k, set
-    intersection per query. The accuracy/cost knob is (m, nbits);
-    recall → 1 as codebooks approach the data (pinned exactly in
-    test_ann.py). Returns (query_id, recall)."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
-    books = pq_train(
-        corpus, m=m, nbits=nbits, seed=seed, sample_mod=sample_mod,
-        id_col=id_col, vec_col=vec_col,
-    )
-    codes = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col)
-    approx = pq_search_batch(
-        codes, books, queries, top_k=top_k, id_col=id_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
-    exact = knn_search_batch_arrow(
-        corpus, queries, top_k=top_k, metric="euclidean",
-        id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
-    return recall_at_k(approx, exact, query_id_col, id_col)
 
 
 def opq_train(
@@ -1394,51 +1239,6 @@ def rotate_vectors(
     )
 
 
-def opq_recall_eval(
-    corpus: DataFrame,
-    queries: DataFrame,
-    m: int = 8,
-    nbits: int = 4,
-    top_k: int = 10,
-    seed: int = 42,
-    iters: int = 8,
-    sample_mod: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
-) -> DataFrame:
-    """recall@k of OPQ (rotate → ADC) vs exact euclidean search. The
-    exact baseline scores the ORIGINAL vectors — legitimate because R
-    is orthogonal (euclidean-invariant), so the true neighbor set is
-    identical in both spaces (pinned by
-    test_rotation_preserves_exact_topk). Returns (query_id, recall),
-    the same contract as `pq_recall_eval` for an apples-to-apples
-    OPQ-vs-PQ comparison."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
-    R, books = opq_train(
-        corpus, m=m, nbits=nbits, seed=seed, iters=iters,
-        sample_mod=sample_mod, id_col=id_col, vec_col=vec_col,
-    )
-    rot_corpus = rotate_vectors(corpus, R, id_col=id_col, vec_col=vec_col)
-    rot_queries = rotate_vectors(
-        queries, R, id_col=query_id_col, vec_col=query_vec_col,
-        out_col=query_vec_col,
-    )
-    codes = pq_encode(rot_corpus, books, id_col=id_col, vec_col=vec_col)
-    approx = pq_search_batch(
-        codes, books, rot_queries, top_k=top_k, id_col=id_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
-    exact = knn_search_batch_arrow(
-        corpus, queries, top_k=top_k, metric="euclidean",
-        id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
-    return recall_at_k(approx, exact, query_id_col, id_col)
-
-
 def pq_search_refined(
     codes_df: DataFrame,
     codebooks: "list[list[list[float]]]",
@@ -1467,8 +1267,6 @@ def pq_search_refined(
     vectors are read for R rows per query, not N. refine_r is the
     recall knob: R = k degenerates to plain ADC ranking, R → N to
     exact search (both pinned in test_ann.py)."""
-    from pyspark.sql import Window
-
     from aeuc_vector_db_spark.functions.similarity import euclidean_similarity_col
 
     if refine_r < top_k:
@@ -1499,49 +1297,10 @@ def pq_search_refined(
     )
 
 
-def pq_refine_recall_eval(
-    corpus: DataFrame,
-    queries: DataFrame,
-    m: int = 8,
-    nbits: int = 4,
-    top_k: int = 10,
-    refine_r: int = 50,
-    seed: int = 42,
-    sample_mod: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
-) -> DataFrame:
-    """recall@k of refined (ADC top-R → exact re-rank) search vs exact
-    euclidean search. The refinement dominates plain ADC recall by
-    construction whenever R > k (the exact re-rank can only promote
-    true neighbors the ADC ranking mis-ordered within its top R) —
-    asserted in test_ann.py. Returns (query_id, recall)."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
-    books = pq_train(
-        corpus, m=m, nbits=nbits, seed=seed, sample_mod=sample_mod,
-        id_col=id_col, vec_col=vec_col,
-    )
-    codes = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col)
-    refined = pq_search_refined(
-        codes, books, queries, corpus, top_k=top_k, refine_r=refine_r,
-        id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
-    exact = knn_search_batch_arrow(
-        corpus, queries, top_k=top_k, metric="euclidean",
-        id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
-    return recall_at_k(refined, exact, query_id_col, id_col)
-
-
 def ivfadc_search_batch(
     codes_with_cells: DataFrame,
     codebooks: "list[list[list[float]]]",
-    centroids: DataFrame,
+    centroids: "DataFrame | list[tuple[int, list[float]]]",
     queries: DataFrame,
     top_k: int = 10,
     nprobe: int = 4,
@@ -1555,67 +1314,19 @@ def ivfadc_search_batch(
     with centroid-partitioned storage the pruned filter is file-level
     PartitionFilters), and PQ ADC bounds what each scored row COSTS
     (m code-byte gathers instead of a d-dim float kernel). Composes
-    `coarse_probe` (euclidean — the ADC pipeline's geometry) with the
-    cell-masked `pq_search_batch`; each query still ranks exactly its
-    own probed cells. nprobe = k degenerates to plain PQ search
-    (pinned in test_ann.py)."""
-    cell_rows = coarse_probe(
-        centroids, queries, nprobe, "euclidean", query_id_col, query_vec_col
-    ).collect()
-    query_cells: dict = {}
-    for r in cell_rows:
-        query_cells.setdefault(r[query_id_col], set()).add(r["centroid_id"])
-    union = sorted({c for cs in query_cells.values() for c in cs})
-    pruned = codes_with_cells.filter(F.col(cell_col).isin(union))
+    the driver probe (`_probe_cells`, euclidean — the ADC pipeline's
+    geometry) with the cell-masked `pq_search_batch`; each query still
+    ranks exactly its own probed cells. nprobe = k degenerates to
+    plain PQ search (pinned in test_ann.py)."""
+    qb, query_cells, pruned = _probe_cells(
+        codes_with_cells, centroids, queries, nprobe, "euclidean", cell_col,
+        query_id_col, query_vec_col,
+    )
     return pq_search_batch(
-        pruned, codebooks, queries, top_k=top_k, id_col=id_col,
+        pruned, codebooks, qb, top_k=top_k, id_col=id_col,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
         cell_col=cell_col, query_cells=query_cells,
     )
-
-
-def ivfadc_recall_eval(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k_cells: int = 8,
-    nprobe: int = 2,
-    m: int = 8,
-    nbits: int = 4,
-    top_k: int = 10,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
-) -> DataFrame:
-    """recall@k of the composed IVFADC search vs exact euclidean: IVF
-    centroids + PQ codebooks both train on the deterministic sample
-    recipe, the corpus encodes to (id, cell, codes), and the composed
-    search runs against the Arrow exact baseline. Two approximation
-    knobs stack (nprobe recall loss × ADC quantization loss) — the
-    honest number a deployment tunes. Returns (query_id, recall)."""
-    from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
-
-    cent_local = fit_centroids_sample_local(
-        corpus, k=k_cells, seed=seed, id_col=id_col, vec_col=vec_col
-    )
-    centroids = corpus.sparkSession.createDataFrame(
-        cent_local, "centroid_id int, centroid array<double>"
-    )
-    books = pq_train(corpus, m=m, nbits=nbits, seed=seed, id_col=id_col, vec_col=vec_col)
-    codes = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col).join(
-        assign_centroids(corpus, cent_local, id_col=id_col, vec_col=vec_col), id_col
-    )
-    approx = ivfadc_search_batch(
-        codes, books, centroids, queries, top_k=top_k, nprobe=nprobe,
-        id_col=id_col, query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
-    exact = knn_search_batch_arrow(
-        corpus, queries, top_k=top_k, metric="euclidean",
-        id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
-    return recall_at_k(approx, exact, query_id_col, id_col)
 
 
 def write_pq_corpus(
@@ -1638,7 +1349,7 @@ def ivfadc_search_disk(
     spark,
     path: str,
     codebooks: "list[list[list[float]]]",
-    centroids: DataFrame,
+    centroids: "DataFrame | list[tuple[int, list[float]]]",
     queries: DataFrame,
     top_k: int = 10,
     nprobe: int = 4,
@@ -1647,22 +1358,14 @@ def ivfadc_search_disk(
     query_vec_col: str = "query_embedding",
     cell_col: str = "centroid_id",
 ) -> DataFrame:
-    """IVFADC over an on-disk `write_pq_corpus` index: coarse probe
-    (euclidean, k·Q scores driver-side) → scan ONLY the probed cells'
-    directories (PartitionFilters — gated in test_ann.py) → cell-masked
-    ADC ranking inside the Arrow kernel. Identical results to the
-    in-memory `ivfadc_search_batch` over the same codes (rank parity
-    pinned); what changes is the IO: unprobed cells are never read."""
-    cell_rows = coarse_probe(
-        centroids, queries, nprobe, "euclidean", query_id_col, query_vec_col
-    ).collect()
-    query_cells: dict = {}
-    for r in cell_rows:
-        query_cells.setdefault(r[query_id_col], set()).add(r["centroid_id"])
-    union = sorted({c for cs in query_cells.values() for c in cs})
-    pruned = read_pruned(spark, path, union)
-    return pq_search_batch(
-        pruned, codebooks, queries, top_k=top_k, id_col=id_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-        cell_col=cell_col, query_cells=query_cells,
+    """IVFADC over an on-disk `write_pq_corpus` index: the same
+    `ivfadc_search_batch` over the parquet root, so the probe's cell
+    filter becomes PartitionFilters on the codes scan (gated in
+    test_ann.py) — unprobed cells' directories are never read. Results
+    equal the in-memory search over the same codes (rank parity
+    pinned); only the IO changes."""
+    return ivfadc_search_batch(
+        spark.read.parquet(path), codebooks, centroids, queries, top_k=top_k,
+        nprobe=nprobe, id_col=id_col, query_id_col=query_id_col,
+        query_vec_col=query_vec_col, cell_col=cell_col,
     )

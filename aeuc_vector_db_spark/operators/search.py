@@ -22,7 +22,7 @@ Spark plan shape:
 from __future__ import annotations
 
 from collections import Counter
-from typing import NamedTuple, Sequence
+from typing import Callable, NamedTuple, Sequence
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -244,15 +244,7 @@ def knn_search_batch_arrow(
 
     `queries` is a DataFrame, collected here to a (Q, d) matrix (small
     by construction), or a QueryBatch a caller already collected. The
-    matrix is closed over; the corpus is scanned ONCE as Arrow batches
-    via mapInPandas, scored with NumPy matrix math, and reduced to a
-    per-partition top-k per query — only k·Q rows leave each
-    partition. One SinglePartition exchange brings them to a single
-    merge task that ranks each query's candidates by (score DESC, id
-    ASC) and emits them in (query_id, rank) order: no Window, no
-    orderBy. The kernel stage is as wide as the cluster: an
-    under-parallel scan is spread to `min_partitions`, and a small
-    scan of many files is narrowed to defaultParallelism.
+    scan is `arrow_topk` with `score_block` as its scorer.
 
     Compare knn_search_batch (SQL expression path): same results
     rank-for-rank, but the crossJoin ships (embedding, query) pairs and
@@ -264,17 +256,61 @@ def knn_search_batch_arrow(
 
     Returns (query_id, id, score, rank) like knn_search_batch.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     qb = (
         queries
         if isinstance(queries, QueryBatch)
         else collect_queries(queries, query_id_col, query_vec_col)
     )
-    q_ids, q_mat = qb.ids, qb.mat
+    return arrow_topk(
+        corpus,
+        qb,
+        lambda vecs: score_block(np.asarray(vecs, dtype=np.float64), qb.mat, metric),
+        width=qb.mat.shape[1],
+        top_k=top_k,
+        id_col=id_col,
+        vec_col=vec_col,
+        query_id_col=query_id_col,
+        min_partitions=min_partitions,
+        cell_col=cell_col,
+        query_cells=query_cells,
+    )
 
+
+def arrow_topk(
+    corpus: DataFrame,
+    qb: QueryBatch,
+    scorer: Callable[[list], np.ndarray],
+    width: int,
+    top_k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    min_partitions: int | None = None,
+    cell_col: str | None = None,
+    query_cells: dict | None = None,
+) -> DataFrame:
+    """The Arrow top-k scan behind every batch search: the exact
+    k-NN (`score_block`) and the PQ ADC scan (a lookup-table gather).
+
+    The corpus is scanned ONCE as Arrow batches via mapInPandas. Each
+    batch's `vec_col` values of length `width` go to `scorer` as a
+    list, which returns their (B, Q) score matrix against `qb`; a NULL
+    or other-length value drops its row, not the job. Each partition
+    keeps its top-k per query, so only k·Q rows leave it. One
+    SinglePartition exchange brings them to a single merge task that
+    ranks each query's candidates by (score DESC, id ASC) and emits
+    them in (query_id, rank) order: no Window, no orderBy. The kernel
+    stage is as wide as the cluster: an under-parallel scan is spread
+    to `min_partitions`, and a small scan of many files is narrowed to
+    defaultParallelism. With `cell_col` + `query_cells`, a query ranks
+    only the rows of its own cells.
+
+    Returns (query_id, id, score, rank)."""
+    from typing import Iterator
+
+    import pandas as pd
+
+    q_ids = qb.ids
     # id column types follow the inputs — string iglyph ids work the same
     # as long vec_ids (the id never enters the arithmetic, only the sort)
     id_type = corpus.schema[id_col].dataType.simpleString()
@@ -290,18 +326,14 @@ def knn_search_batch_arrow(
         # accumulate the per-partition top-k per query across Arrow batches
         best: dict = {}
         for pdf in batches:
-            if not len(pdf):
-                continue
-            # NULL / wrong-dimension embeddings are dropped per row, not
-            # crashed on: np.vstack over a ragged batch raises and aborts
-            # the whole job after retries, while the SQL twin
-            # null-propagates (null scores sort last and fall out of the
-            # top-k) — same guard as assign_centroids' kernel
-            dim = q_mat.shape[1]
+            # NULL / wrong-width vectors are dropped per row, not crashed
+            # on: np.asarray over a ragged batch raises and aborts the
+            # whole job after retries, while the SQL twin null-propagates
+            # (null scores sort last and fall out of the top-k)
             vec_list = pdf[vec_col].tolist()
             ok = [
                 i for i, v in enumerate(vec_list)
-                if v is not None and len(v) == dim
+                if v is not None and len(v) == width
             ]
             if not ok:
                 continue
@@ -312,8 +344,7 @@ def knn_search_batch_arrow(
             # np.asarray over the python list: string ids become '<U' dtype
             # (lexsort-able), where pandas .to_numpy() would yield object
             ids = np.asarray(ids_py)
-            mat = np.asarray(vec_list, dtype=np.float64)
-            scores = score_block(mat, q_mat, metric)  # (B, Q)
+            scores = scorer(vec_list)  # (B, Q)
             cells_arr = (
                 pdf[cell_col].to_numpy() if allowed_cells is not None else None
             )
@@ -332,9 +363,10 @@ def knn_search_batch_arrow(
                 take = min(top_k, len(sub_col))
                 # lexsort on (id asc secondary, score desc primary): a bare
                 # argpartition on score would cut arbitrarily through TIED
-                # scores at the k-th place (e.g. planted duplicate vectors)
-                # and could drop the id the (score DESC, id ASC) contract
-                # keeps — O(B log B) per batch is noise next to the scoring
+                # scores at the k-th place (planted duplicate vectors, or
+                # PQ rows sharing codes) and could drop the id the
+                # (score DESC, id ASC) contract keeps — O(B log B) per
+                # batch is noise next to the scoring
                 order = np.lexsort((sub_ids, -sub_col))[:take]
                 sel = vi[order] if vi is not None else order
                 cand = best.setdefault(qid, [])

@@ -500,6 +500,10 @@ def quality_score_col(text: Column | str) -> Column:
     score = 0.4·min(n_tokens/100, 1)
           + 0.3·min(stopword_ratio/0.1, 1)
           + 0.3·(1 − |mean_len − 5| / 5, floored at 0)
+
+    A document with no tokens (empty or punctuation-only text) has no
+    ratio or mean to score: its quality is NULL, which fails every
+    `quality >= floor` filter (DuckDB's x/0 is NULL too).
     """
     return let_col(tokens_col(text), _quality_of_tokens)
 
@@ -521,10 +525,13 @@ def _quality_of_tokens(t: Column) -> Column:
     len_term = F.greatest(
         F.lit(0.0), F.lit(1.0) - F.abs(mean_len - F.lit(5.0)) / F.lit(5.0)
     )
-    return (
+    # the divisions sit in the THEN branch, evaluated only for n > 0:
+    # under ANSI mode x/0 raises DIVIDE_BY_ZERO and fails the query
+    return F.when(
+        n > F.lit(0.0),
         F.lit(0.4) * F.least(n / F.lit(100.0), F.lit(1.0))
         + F.lit(0.3) * F.least(sw_ratio / F.lit(0.1), F.lit(1.0))
-        + F.lit(0.3) * len_term
+        + F.lit(0.3) * len_term,
     )
 
 

@@ -3,9 +3,11 @@
 `ivf_pruned_search` uses a deterministic coarse quantizer (per-label
 centroids — the engine's PGlyph analog) so the whole two-level plan is
 SQL-expressible and DuckDB-oracled. `ann_ivf_recall` swaps in a trained
-KMeans quantizer (MLlib, fixed seed) — not SQL-expressible, so it's a
-rows-only check; its semantics are pinned by tests/test_ann.py instead
-(recall = 1.0 at nprobe = k, partition pruning visible in the plan).
+quantizer (sample-fit Lloyd's, fixed seed) — not SQL-expressible, so it's
+a rows-only check; its semantics are pinned by tests/test_ann.py instead
+(recall = 1.0 at nprobe = k, partition pruning visible in the plan). The
+`ann_*_recall` family runs each index's train → encode → search steps
+here and scores the result with the one `ann.recall_eval`.
 """
 
 from __future__ import annotations
@@ -295,19 +297,15 @@ def _ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FAISS IVF training recipe, deterministic NumPy) rather than the
     MLlib fit: same IVF semantics, ~20× cheaper cold (the MLlib fit alone
     cost 14.6 s at a 500-row sf, blowing the per-query verification
-    budget). The evaluation is ivf_recall_eval_arrow (late round 9):
-    both branches score in the NumPy kernel — recall values identical
-    to the SQL-fold ivf_recall_eval (ranks agree, test-pinned), at a
-    fraction of the interpreted-HOF cost that made this the slowest
-    sweep entry."""
+    budget). The search is ivf_search_batch_arrow and `recall_eval`
+    scores it against the exact Arrow top-k: both score in the NumPy
+    kernel, whose ranks agree with the SQL-fold twins (test-pinned)."""
     emb = load_table(spark, "embeddings", sf_dir)
     queries = _queries_df(spark, sf_dir)
     cent_local = A.fit_centroids_sample_local(emb, k=8, seed=42, iters=10)
-    centroids = spark.createDataFrame(
-        cent_local, "centroid_id int, centroid array<double>"
-    )
     corpus = emb.join(A.assign_centroids(emb, cent_local), "vec_id")
-    rec = A.ivf_recall_eval_arrow(corpus, centroids, queries, top_k=10, nprobe=2)
+    approx = A.ivf_search_batch_arrow(corpus, cent_local, queries, top_k=10, nprobe=2)
+    rec = A.recall_eval(approx, corpus, queries, top_k=10)
     return _recall_gated(spark, rec, floor=0.2)
 
 
@@ -319,11 +317,14 @@ def _ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic pipeline (id-sorted sample, seeded Lloyd per
     subspace, first-minimum tie-breaks, score DESC / id ASC ranking)
     makes the per-query recall values stable across runs and
-    partitionings. Exactness at the limit and null tolerance are
-    pinned in test_ann.py."""
+    partitionings: train (pq_train) → encode (pq_encode) → ADC search
+    (pq_search_batch) → recall_eval. Exactness at the limit and null
+    tolerance are pinned in test_ann.py."""
     emb = load_table(spark, "embeddings", sf_dir)
     queries = _queries_df(spark, sf_dir)
-    rec = A.pq_recall_eval(emb, queries, m=8, nbits=4, top_k=10, seed=42)
+    books = A.pq_train(emb, m=8, nbits=4, seed=42)
+    approx = A.pq_search_batch(A.pq_encode(emb, books), books, queries, top_k=10)
+    rec = A.recall_eval(approx, emb, queries, top_k=10, metric="euclidean")
     return _recall_gated(spark, rec, floor=0.1)
 
 
@@ -332,20 +333,26 @@ def _ann_pq_refine_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank of the 50 survivors (operators/ann.py pq_search_refined).
     Rows-only check (codebook training not SQL-expressible); the
     refinement ≥ plain-ADC recall dominance and the R→N exactness
-    limit are pinned in test_ann.py."""
+    limit are pinned in test_ann.py. One trained codebook and one
+    `pq_encode` frame serve both the refined and the plain ADC search,
+    and both recalls are scored against one exact baseline
+    (`recall_eval` over a list)."""
     emb = load_table(spark, "embeddings", sf_dir)
     queries = _queries_df(spark, sf_dir)
-    rec = A.pq_refine_recall_eval(
-        emb, queries, m=8, nbits=4, top_k=10, refine_r=50, seed=42
+    books = A.pq_train(emb, m=8, nbits=4, seed=42)
+    codes = A.pq_encode(emb, books)
+    refined = A.pq_search_refined(codes, books, queries, emb, top_k=10, refine_r=50)
+    plain = A.pq_search_batch(codes, books, queries, top_k=10)
+    rec, plain_rec = A.recall_eval(
+        [refined, plain], emb, queries, top_k=10, metric="euclidean"
     )
     # refinement-dominance violations ride the output as EXTRA rows
     # (query_id negated, recall = refined - plain, strictly negative):
     # exact re-ranking of the ADC top-50 can only help, so any query
     # where refined < plain is a bug and grows the driver-visible count
-    plain = A.pq_recall_eval(emb, queries, m=8, nbits=4, top_k=10, seed=42)
     bad = (
         rec.select("query_id", F.col("recall").alias("r_ref"))
-        .join(plain.select("query_id", F.col("recall").alias("r_plain")), "query_id")
+        .join(plain_rec.select("query_id", F.col("recall").alias("r_plain")), "query_id")
         .filter(F.col("r_ref") < F.col("r_plain"))
     )
     # emitted TWICE per violating query: a dominance-violating recall
@@ -369,18 +376,23 @@ def _ann_opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_pq_recall situation). A learned orthogonal rotation (Ge et
     al. CVPR'13 OPQ-NP, `operators/ann.py opq_train`) aligns the PQ
     subspace split with the data's principal directions before
-    encoding; distances are rotation-invariant, so the exact baseline
-    scores the ORIGINAL vectors (test-pinned). On the near-isotropic
-    fixture OPQ ≈ plain PQ by design (nothing to align); the rotation
-    win is pinned on planted anisotropic data in
+    encoding; corpus and queries are rotated, encoded and searched
+    with ADC. Distances are rotation-invariant, so the exact baseline
+    scores the ORIGINAL vectors (test_rotation_preserves_exact_topk).
+    On the near-isotropic fixture OPQ ≈ plain PQ by design (nothing to
+    align); the rotation win is pinned on planted anisotropic data in
     test_opq_beats_plain_pq_on_cross_subspace_correlation. Fully
     deterministic: seeded sample fit, deterministic SVD, first-minimum
     tie-breaks."""
     emb = load_table(spark, "embeddings", sf_dir)
     queries = _queries_df(spark, sf_dir)
-    rec = A.opq_recall_eval(
-        emb, queries, m=8, nbits=4, top_k=10, seed=42, iters=8
+    R, books = A.opq_train(emb, m=8, nbits=4, seed=42, iters=8)
+    codes = A.pq_encode(A.rotate_vectors(emb, R), books)
+    rot_queries = A.rotate_vectors(
+        queries, R, id_col="query_id", vec_col="query_embedding"
     )
+    approx = A.pq_search_batch(codes, books, rot_queries, top_k=10)
+    rec = A.recall_eval(approx, emb, queries, top_k=10, metric="euclidean")
     return _recall_gated(spark, rec, floor=0.1)
 
 
@@ -388,13 +400,18 @@ def _ann_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed IVFADC recall@10 vs exact euclidean (rows-only): IVF
     coarse probe bounds WHICH rows each query scores, PQ ADC bounds
     what each row COSTS — both approximation knobs stacked, the number
-    a real deployment tunes. Fully deterministic (seeded sample fits,
-    first-minimum tie-breaks, score DESC / id ASC)."""
+    a real deployment tunes. The IVF centroids and the PQ codebooks
+    both train on the deterministic sample recipe, the corpus encodes
+    to (id, codes, cell), and ivfadc_search_batch runs over it. Fully
+    deterministic (seeded sample fits, first-minimum tie-breaks, score
+    DESC / id ASC)."""
     emb = load_table(spark, "embeddings", sf_dir)
     queries = _queries_df(spark, sf_dir)
-    rec = A.ivfadc_recall_eval(
-        emb, queries, k_cells=8, nprobe=4, m=8, nbits=4, top_k=10, seed=42
-    )
+    cent_local = A.fit_centroids_sample_local(emb, k=8, seed=42)
+    books = A.pq_train(emb, m=8, nbits=4, seed=42)
+    codes = A.pq_encode(emb, books).join(A.assign_centroids(emb, cent_local), "vec_id")
+    approx = A.ivfadc_search_batch(codes, books, cent_local, queries, top_k=10, nprobe=4)
+    rec = A.recall_eval(approx, emb, queries, top_k=10, metric="euclidean")
     return _recall_gated(spark, rec, floor=0.1)
 
 

@@ -103,30 +103,29 @@ def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFram
     unchanged — only physical placement moves.
 
     Parallelism probe (round 16, ADVICE r15): `df.rdd.getNumPartitions()`
-    forces full physical planning outside AQE on EVERY call — measurable
-    driver latency per query build even when the guard no-ops. The scan
-    fan-out proxy is `len(df.inputFiles())` instead: pure file-listing
-    metadata, no planning. One file can SPLIT into several scan tasks
-    (maxPartitionBytes), so the proxy under-counts tasks and the guard
-    stays conservative — it may spread a frame that already had enough
-    splits, never the reverse; for the heavy-kernel call sites this
-    helper serves (shingle/winnow/HOF-pair kernels costing seconds per
-    partition) an occasionally redundant round-robin of the projected
-    input is noise, which is also the documented BOUNDARY of this
+    forces full physical planning outside AQE — measurable driver
+    latency per query build. So the file count (`df.inputFiles()`, pure
+    listing metadata) decides first, but only in one direction: a scan
+    of fewer files than `target` is spread without the probe. (One file
+    can split into several tasks, so such a scan may already have had
+    enough; an occasionally redundant round-robin of the projected
+    input is noise at the heavy-kernel call sites this helper serves —
+    shingle/winnow/HOF-pair kernels costing seconds per partition.) A
+    count at or above `target` proves nothing, because Spark packs
+    small files into one split (8 tiny files can scan as 1 task), so
+    the partition probe confirms before the scan is called parallel;
+    a plan with no file metadata (in-memory relation, shuffle-rooted
+    frame) goes to the probe as well. The documented BOUNDARY of this
     helper: do not apply it to scan-bound paths where the shuffle
     itself would dominate (VERDICT r15 — prefer lowering
     spark.sql.files.maxPartitionBytes there)."""
     if target is None:
         target = max(2, df.sparkSession.sparkContext.defaultParallelism // 2)
     try:
-        n_input = len(df.inputFiles())
+        n_files = len(df.inputFiles())
     except Exception:
-        n_input = 0
-    if n_input == 0:
-        # non-file-backed plan (in-memory relation, shuffle-rooted
-        # frame): no file metadata to read, use the RDD probe as before
-        n_input = df.rdd.getNumPartitions()
-    if n_input < target:
+        n_files = 0
+    if 0 < n_files < target or df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 

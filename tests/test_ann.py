@@ -32,6 +32,31 @@ def index(emb):
     return A.build_ivf_index(emb, k=8, seed=42)
 
 
+def _pq_recall(corpus, queries, m, nbits, top_k=10, seed=42):
+    """train → encode → ADC search → recall_eval (ann_pq_recall's steps)."""
+    books = A.pq_train(corpus, m=m, nbits=nbits, seed=seed)
+    approx = A.pq_search_batch(A.pq_encode(corpus, books), books, queries, top_k=top_k)
+    return A.recall_eval(approx, corpus, queries, top_k=top_k, metric="euclidean")
+
+
+def _opq_recall(corpus, queries, m, nbits, top_k=10, seed=42, iters=8):
+    """rotate → encode → ADC search → recall_eval (ann_opq_recall's steps)."""
+    R, books = A.opq_train(corpus, m=m, nbits=nbits, seed=seed, iters=iters)
+    codes = A.pq_encode(A.rotate_vectors(corpus, R), books)
+    rot_q = A.rotate_vectors(queries, R, id_col="query_id", vec_col="query_embedding")
+    approx = A.pq_search_batch(codes, books, rot_q, top_k=top_k)
+    return A.recall_eval(approx, corpus, queries, top_k=top_k, metric="euclidean")
+
+
+def _ivfadc_recall(corpus, queries, k_cells, nprobe, m, nbits, top_k=10, seed=42):
+    """IVF + PQ training → IVFADC search → recall_eval (ann_ivfadc_recall's steps)."""
+    cent = A.fit_centroids_sample_local(corpus, k=k_cells, seed=seed)
+    books = A.pq_train(corpus, m=m, nbits=nbits, seed=seed)
+    codes = A.pq_encode(corpus, books).join(A.assign_centroids(corpus, cent), "vec_id")
+    approx = A.ivfadc_search_batch(codes, books, cent, queries, top_k=top_k, nprobe=nprobe)
+    return A.recall_eval(approx, corpus, queries, top_k=top_k, metric="euclidean")
+
+
 def test_kmeans_index_shape_and_determinism(emb, index):
     centroids, assignments = index
     assert centroids.count() == 8
@@ -121,47 +146,6 @@ def test_recall_handles_missing_queries(spark):
     rec = {r["query_id"]: r["recall"] for r in A.recall_at_k(approx, exact).collect()}
     assert rec[1] == 0.5
     assert rec[2] == 0.0  # query absent from approx → recall 0, not missing
-
-
-def test_ivf_recall_eval_matches_two_pass(emb, queries, index):
-    """The shared-scan evaluator must report exactly what running
-    ivf_search_batch + knn_search_batch through recall_at_k reports."""
-    centroids, assignments = index
-    corpus = emb.join(assignments, "vec_id")
-    fused = {
-        r["query_id"]: r["recall"]
-        for r in A.ivf_recall_eval(
-            corpus, centroids, queries, top_k=10, nprobe=2
-        ).collect()
-    }
-    approx = A.ivf_search_batch(corpus, centroids, queries, top_k=10, nprobe=2)
-    exact = knn_search_batch(emb, queries, top_k=10)
-    two_pass = {
-        r["query_id"]: r["recall"] for r in A.recall_at_k(approx, exact).collect()
-    }
-    assert fused == two_pass
-
-
-def test_ivf_recall_eval_arrow_matches_sql_eval(emb, queries, index):
-    """The Arrow evaluator (NumPy kernel both branches) must report the
-    SAME recall values as the SQL-fold evaluator — ranks agree between
-    the twins (low-order score bits differ, order doesn't), and recall
-    compares id SETS, so the numbers are identical, not merely close."""
-    centroids, assignments = index
-    corpus = emb.join(assignments, "vec_id")
-    sql_eval = {
-        r["query_id"]: r["recall"]
-        for r in A.ivf_recall_eval(
-            corpus, centroids, queries, top_k=10, nprobe=2
-        ).collect()
-    }
-    arrow_eval = {
-        r["query_id"]: r["recall"]
-        for r in A.ivf_recall_eval_arrow(
-            corpus, centroids, queries, top_k=10, nprobe=2
-        ).collect()
-    }
-    assert sql_eval == arrow_eval
 
 
 def test_assign_centroids_accepts_local_list(spark, emb):
@@ -294,28 +278,89 @@ def test_ivf_arrow_batch_runs_at_most_five_jobs(spark, emb, queries, index, tmp_
     assert rows and len(jobs) <= 5, jobs
 
 
-def test_ivf_arrow_dirty_queries_and_centroids_raise(spark, emb, index):
+def test_ivf_arrow_dirty_queries_and_centroids_raise(spark, emb, index, tmp_path):
     """A NULL or wrong-dimension query vector, or a wrong-dimension
     centroid, fails with a ValueError naming it — not a TypeError from
-    inside the kernel."""
+    inside the kernel — on the exact IVF path and on every PQ path."""
     centroids, assignments = index
     corpus = emb.join(assignments, "vec_id")
     dim = len(centroids.first()["centroid"])
+    books = A.literal_codebooks(8, 16, dim // 8)
+    codes = A.pq_encode(corpus, books).join(assignments, "vec_id")
+    path = str(tmp_path / "pq_idx")
+    A.write_pq_corpus(codes, path)
+    searches = {
+        "ivf_search_batch_arrow": lambda q: A.ivf_search_batch_arrow(corpus, centroids, q),
+        "pq_search_batch": lambda q: A.pq_search_batch(codes, books, q),
+        "pq_search_refined": lambda q: A.pq_search_refined(codes, books, q, emb),
+        "ivfadc_search_batch": lambda q: A.ivfadc_search_batch(codes, books, centroids, q),
+        "ivfadc_search_disk": lambda q: A.ivfadc_search_disk(spark, path, books, centroids, q),
+    }
     good = [0.5] * dim
     schema = "query_id long, query_embedding array<float>"
-    for rows, match in (
-        ([(1, good), (7, None)], "query 7: NULL"),
-        ([(1, good), (9, good[:-1])], f"query 9: vector has dimension {dim - 1}, expected {dim}"),
-    ):
-        with pytest.raises(ValueError, match=match):
-            A.ivf_search_batch_arrow(corpus, centroids, spark.createDataFrame(rows, schema))
-    # a lone query of the wrong dimension is measured against the centroids
-    with pytest.raises(ValueError, match="query 2: vector has dimension 3"):
-        A.ivf_search_batch_arrow(corpus, centroids, spark.createDataFrame([(2, [1.0] * 3)], schema))
+    for search in searches.values():
+        for rows, match in (
+            ([(1, good), (7, None)], "query 7: NULL"),
+            ([(1, good), (9, good[:-1])], f"query 9: vector has dimension {dim - 1}, expected {dim}"),
+            # a lone query of the wrong dimension is measured against the
+            # centroids or the codebooks
+            ([(2, [1.0] * 3)], "query 2: vector has dimension 3"),
+        ):
+            with pytest.raises(ValueError, match=match):
+                search(spark.createDataFrame(rows, schema))
     cents = [(r["centroid_id"], list(r["centroid"])) for r in centroids.collect()]
     cents[4] = (cents[4][0], cents[4][1][:-2])
     with pytest.raises(ValueError, match=f"centroid {cents[4][0]}: vector has dimension {dim - 2}"):
         A.ivf_search_batch_arrow(corpus, cents, spark.createDataFrame([(1, good)], schema))
+
+
+def test_pq_batch_runs_at_most_three_jobs(emb, queries, job_group):
+    """An ADC batch search runs at most 3 Spark jobs: the query
+    collect, the kernel stage and the merge stage (no Window or
+    orderBy stages)."""
+    books = A.literal_codebooks(8, 16, 8)
+    codes = A.pq_encode(emb, books)
+    rows = []
+    jobs, _stages = job_group(
+        "pq-batch-jobs",
+        lambda: rows.extend(A.pq_search_batch(codes, books, queries, top_k=10).collect()),
+    )
+    assert rows and len(jobs) <= 3, jobs
+
+
+def test_ivfadc_batch_runs_at_most_four_jobs(spark, emb, queries, index, tmp_path, job_group):
+    """An IVFADC batch search over partitioned codes runs at most 4
+    Spark jobs: the centroid and query collects, the kernel stage and
+    the merge stage (the coarse probe runs on the driver)."""
+    centroids, assignments = index
+    books = A.literal_codebooks(8, 16, 8)
+    path = str(tmp_path / "pq_idx")
+    A.write_pq_corpus(A.pq_encode(emb, books).join(assignments, "vec_id"), path)
+    codes = spark.read.parquet(path)
+    rows = []
+    jobs, _stages = job_group(
+        "ivfadc-batch-jobs",
+        lambda: rows.extend(
+            A.ivfadc_search_batch(codes, books, centroids, queries, top_k=10, nprobe=3).collect()
+        ),
+    )
+    assert rows and len(jobs) <= 4, jobs
+
+
+def test_ivfadc_driver_probe_matches_sql_coarse_probe(emb, queries, index):
+    """The driver probe the IVFADC paths run picks, for every query,
+    the same cells as the SQL coarse_probe under the euclidean metric."""
+    centroids, assignments = index
+    codes = emb.join(assignments, "vec_id")
+    for nprobe in (1, 2, 3):
+        _qb, cells, _pruned = A._probe_cells(
+            codes, centroids, queries, nprobe, "euclidean", "centroid_id",
+            "query_id", "query_embedding",
+        )
+        sql: dict = {}
+        for r in A.coarse_probe(centroids, queries, nprobe, "euclidean").collect():
+            sql.setdefault(r["query_id"], set()).add(r["centroid_id"])
+        assert cells == sql and len(sql) > 1, nprobe
 
 
 def test_pq_exact_when_every_subvector_is_a_centroid(spark):
@@ -340,13 +385,8 @@ def test_pq_exact_when_every_subvector_is_a_centroid(spark):
     got = [(r["vec_id"], r["rank"]) for r in res]
     # exact euclidean order from the query: 0 < 1 < 2 < 3
     assert got == [(0, 1), (1, 2), (2, 3), (3, 4)]
-    rec = A.pq_recall_eval(
-        corpus,
-        qs,
-        m=2,
-        nbits=2,
-        top_k=4,
-        seed=7,
+    rec = A.recall_eval(
+        A.pq_search_batch(codes, books, qs, top_k=4), corpus, qs, top_k=4, metric="euclidean"
     ).collect()
     assert [(r["query_id"], r["recall"]) for r in rec] == [(0, 1.0)]
 
@@ -403,11 +443,11 @@ def test_pq_recall_deterministic_and_reasonable(emb, queries):
     32x compression (64 floats -> 8 code bytes)."""
     r1 = {
         (r["query_id"]): r["recall"]
-        for r in A.pq_recall_eval(emb, queries, m=8, nbits=4, seed=42).collect()
+        for r in _pq_recall(emb, queries, m=8, nbits=4, seed=42).collect()
     }
     r2 = {
         (r["query_id"]): r["recall"]
-        for r in A.pq_recall_eval(emb, queries, m=8, nbits=4, seed=42).collect()
+        for r in _pq_recall(emb, queries, m=8, nbits=4, seed=42).collect()
     }
     assert r1 == r2 and len(r1) > 0
     assert all(0.0 < v <= 1.0 for v in r1.values())
@@ -415,7 +455,7 @@ def test_pq_recall_deterministic_and_reasonable(emb, queries):
     # not per-query monotonicity, which PQ does not guarantee)
     r8 = {
         (r["query_id"]): r["recall"]
-        for r in A.pq_recall_eval(emb, queries, m=8, nbits=6, seed=42).collect()
+        for r in _pq_recall(emb, queries, m=8, nbits=6, seed=42).collect()
     }
     assert sum(r8.values()) / len(r8) >= sum(r1.values()) / len(r1) - 0.05
 
@@ -447,13 +487,13 @@ def test_ivfadc_with_all_cells_equals_plain_pq(spark, emb, queries):
 def test_ivfadc_recall_eval_deterministic(emb, queries):
     r1 = {
         r["query_id"]: r["recall"]
-        for r in A.ivfadc_recall_eval(
+        for r in _ivfadc_recall(
             emb, queries, k_cells=8, nprobe=4, m=8, nbits=4, seed=42
         ).collect()
     }
     r2 = {
         r["query_id"]: r["recall"]
-        for r in A.ivfadc_recall_eval(
+        for r in _ivfadc_recall(
             emb, queries, k_cells=8, nprobe=4, m=8, nbits=4, seed=42
         ).collect()
     }
@@ -612,12 +652,8 @@ def test_pq_refine_full_r_recovers_exact_search(emb, queries):
     n = emb.count()
     books = A.pq_train(emb, m=8, nbits=4, seed=42)
     codes = A.pq_encode(emb, books)
-    got = {
-        (r["query_id"], r["rank"]): r["vec_id"]
-        for r in A.pq_search_refined(
-            codes, books, queries, emb, top_k=10, refine_r=n
-        ).collect()
-    }
+    refined = A.pq_search_refined(codes, books, queries, emb, top_k=10, refine_r=n)
+    got = {(r["query_id"], r["rank"]): r["vec_id"] for r in refined.collect()}
     want = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in knn_search_batch_arrow(
@@ -625,7 +661,7 @@ def test_pq_refine_full_r_recovers_exact_search(emb, queries):
         ).collect()
     }
     assert got == want
-    rec = A.pq_refine_recall_eval(emb, queries, refine_r=n, seed=42).collect()
+    rec = A.recall_eval(refined, emb, queries, top_k=10, metric="euclidean").collect()
     assert all(r["recall"] == 1.0 for r in rec) and rec
 
 
@@ -633,16 +669,17 @@ def test_pq_refine_dominates_plain_adc(emb, queries):
     """With R > k the exact re-rank can only promote true neighbors the
     ADC ranking mis-ordered inside its top R — refined recall must be
     >= plain ADC recall for EVERY query, not just on average."""
-    plain = {
-        r["query_id"]: r["recall"]
-        for r in A.pq_recall_eval(emb, queries, m=8, nbits=4, seed=42).collect()
-    }
-    refined = {
-        r["query_id"]: r["recall"]
-        for r in A.pq_refine_recall_eval(
-            emb, queries, m=8, nbits=4, refine_r=50, seed=42
-        ).collect()
-    }
+    books = A.pq_train(emb, m=8, nbits=4, seed=42)
+    codes = A.pq_encode(emb, books)
+    refined_rec, plain_rec = A.recall_eval(
+        [
+            A.pq_search_refined(codes, books, queries, emb, top_k=10, refine_r=50),
+            A.pq_search_batch(codes, books, queries, top_k=10),
+        ],
+        emb, queries, top_k=10, metric="euclidean",
+    )
+    plain = {r["query_id"]: r["recall"] for r in plain_rec.collect()}
+    refined = {r["query_id"]: r["recall"] for r in refined_rec.collect()}
     assert set(refined) == set(plain)
     assert all(refined[q] >= plain[q] for q in plain)
 
@@ -951,8 +988,9 @@ def test_recall_canary_fires_on_ivf_degradation(spark):
     queries = spark.createDataFrame(
         [(100, [1.0] + [0.0] * 7)], "query_id long, query_embedding array<double>"
     )
-    rec = A.ivf_recall_eval_arrow(
-        corrupted, centroids, queries, top_k=10, nprobe=1
+    rec = A.recall_eval(
+        A.ivf_search_batch_arrow(corrupted, centroids, queries, top_k=10, nprobe=1),
+        corrupted, queries, top_k=10,
     )
     out = _recall_gated(spark, rec, floor=0.2)  # the ann_ivf_recall floor
     assert _canary_ids(out) == [-9100]
@@ -962,7 +1000,10 @@ def test_recall_canary_fires_on_ivf_degradation(spark):
     healthy = corpus.withColumn(
         "centroid_id", (F.col("vec_id") / 40 % 4).cast("int")
     )
-    rec_h = A.ivf_recall_eval_arrow(healthy, centroids, queries, top_k=10, nprobe=1)
+    rec_h = A.recall_eval(
+        A.ivf_search_batch_arrow(healthy, centroids, queries, top_k=10, nprobe=1),
+        healthy, queries, top_k=10,
+    )
     assert _canary_ids(_recall_gated(spark, rec_h, floor=0.2)) == []
 
 
@@ -986,7 +1027,7 @@ def test_recall_canary_fires_on_pq_collapse(spark):
     from aeuc_vector_db_spark.queries.ann import _recall_gated
 
     corpus, queries = _collapsed_pq_corpus(spark)
-    rec = A.pq_recall_eval(corpus, queries, m=1, nbits=1, top_k=10, seed=42)
+    rec = _pq_recall(corpus, queries, m=1, nbits=1, top_k=10, seed=42)
     out = _recall_gated(spark, rec, floor=0.1)  # the ann_pq_recall floor
     assert _canary_ids(out) == [-9007]
 
@@ -998,9 +1039,11 @@ def test_recall_canary_fires_on_pq_refine_starved(spark):
     from aeuc_vector_db_spark.queries.ann import _recall_gated
 
     corpus, queries = _collapsed_pq_corpus(spark)
-    rec = A.pq_refine_recall_eval(
-        corpus, queries, m=1, nbits=1, top_k=10, refine_r=10, seed=42
+    books = A.pq_train(corpus, m=1, nbits=1, seed=42)
+    refined = A.pq_search_refined(
+        A.pq_encode(corpus, books), books, queries, corpus, top_k=10, refine_r=10
     )
+    rec = A.recall_eval(refined, corpus, queries, top_k=10, metric="euclidean")
     out = _recall_gated(spark, rec, floor=0.3)  # the ann_pq_refine floor
     assert _canary_ids(out) == [-9007]
 
@@ -1010,7 +1053,7 @@ def test_recall_canary_fires_on_ivfadc_collapse(spark):
     from aeuc_vector_db_spark.queries.ann import _recall_gated
 
     corpus, queries = _collapsed_pq_corpus(spark)
-    rec = A.ivfadc_recall_eval(
+    rec = _ivfadc_recall(
         corpus, queries, k_cells=2, nprobe=1, m=1, nbits=1, top_k=10, seed=42
     )
     out = _recall_gated(spark, rec, floor=0.1)  # the ann_ivfadc floor
@@ -1056,7 +1099,7 @@ def test_opq_rotation_is_orthogonal_and_deterministic(spark):
 def test_rotation_preserves_exact_topk(spark):
     """R is orthogonal, so exact euclidean top-k over rotated vectors
     and rotated queries returns the SAME ids — the fact that lets
-    opq_recall_eval score its exact baseline on the original space."""
+    the OPQ recall score its exact baseline on the original space."""
     from aeuc_vector_db_spark.operators.search import knn_search_batch_arrow
 
     corpus, _x = _cross_subspace_corpus(spark)
@@ -1102,10 +1145,8 @@ def test_opq_beats_plain_pq_on_cross_subspace_correlation(spark):
         ],
         "query_id long, query_embedding array<double>",
     )
-    pq = A.pq_recall_eval(corpus, queries, m=4, nbits=4, top_k=10, seed=42)
-    opq = A.opq_recall_eval(
-        corpus, queries, m=4, nbits=4, top_k=10, seed=42, iters=8
-    )
+    pq = _pq_recall(corpus, queries, m=4, nbits=4, top_k=10, seed=42)
+    opq = _opq_recall(corpus, queries, m=4, nbits=4, top_k=10, seed=42, iters=8)
     pq_avg = sum(r["recall"] for r in pq.collect()) / 5
     opq_avg = sum(r["recall"] for r in opq.collect()) / 5
     assert opq_avg > pq_avg, (opq_avg, pq_avg)

@@ -4,7 +4,8 @@
   O(n·types) counting form bit-for-bit on edge-case corpora (the sf
   sweeps prove it on fixture data; this pins empty/null/degenerate
   token arrays).
-- ensure_min_parallelism must spread an under-parallel scan, leave an
+- ensure_min_parallelism must spread an under-parallel scan (also one
+  of many small files packed into one split), leave an
   already-parallel frame alone, and never change the row multiset.
 """
 
@@ -108,6 +109,30 @@ def test_ensure_min_parallelism_noop_when_already_parallel(spark):
     df = spark.range(1000).repartition(8).toDF("x")
     out = ensure_min_parallelism(df, target=4)
     assert out is df  # no extra exchange inserted
+
+
+def test_ensure_min_parallelism_spreads_packed_small_files(spark, tmp_path):
+    """8 tiny parquet files that Spark packs into ONE split are a
+    1-task scan: the file count alone must not call it parallel."""
+    path = str(tmp_path / "tiny")
+    spark.range(80).repartition(8).write.parquet(path)
+    # pack every file into one split: no per-file open cost, one lane
+    packing = {"spark.sql.files.openCostInBytes": "0", "spark.sql.files.minPartitionNum": "1"}
+    saved = {k: spark.conf.get(k, None) for k in packing}
+    for k, v in packing.items():
+        spark.conf.set(k, v)
+    try:
+        df = spark.read.parquet(path)
+        assert len(df.inputFiles()) == 8 and df.rdd.getNumPartitions() == 1
+        out = ensure_min_parallelism(df, target=4)
+        assert out.rdd.getNumPartitions() == 4
+        assert sorted(r["id"] for r in out.collect()) == list(range(80))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_io_state_reports_all_three_noise_axes():

@@ -47,29 +47,26 @@ def test_recall_gate_drops_rows_below_floor(spark):
 
 
 def test_refine_dominance_violation_grows_count(spark, monkeypatch):
-    """Deliberate bug: the refined eval reports WORSE recall than plain
-    ADC for two queries — the query must emit extra violation rows."""
+    """Deliberate bug: the refined search loses its results for two
+    queries, so their refined recall falls to 0, below plain ADC — the
+    query must emit extra violation rows."""
     from aeuc_vector_db_spark.operators import ann as A
     from aeuc_vector_db_spark.queries import ann as QA
 
     baseline = QA.QUERIES["ann_pq_refine_recall"][0](spark, SF01_DIR).count()
 
-    real_refine = A.pq_refine_recall_eval
+    real_refined = A.pq_search_refined
 
-    def degraded(emb, queries, **kw):
-        rec = real_refine(emb, queries, **kw)
-        return rec.withColumn(
-            "recall",
-            F.when(F.col("query_id").isin(3, 103), F.lit(0.0)).otherwise(
-                F.col("recall")
-            ),
-        )
+    def degraded(*args, **kw):
+        return real_refined(*args, **kw).filter(~F.col("query_id").isin(3, 103))
 
-    monkeypatch.setattr(A, "pq_refine_recall_eval", degraded)
-    bugged = QA.QUERIES["ann_pq_refine_recall"][0](spark, SF01_DIR).count()
+    monkeypatch.setattr(A, "pq_search_refined", degraded)
+    bugged = QA.QUERIES["ann_pq_refine_recall"][0](spark, SF01_DIR).collect()
     # two queries drop below the 0.3 floor (-2) AND violate dominance
     # (+2): the count must MOVE either way the arithmetic lands
-    assert bugged != baseline
+    assert len(bugged) != baseline
+    ids = {r["query_id"] for r in bugged}
+    assert {-1003, -2003, -1103, -2103} <= ids, ids
 
 
 # ---------------------------------------------------------------------------
