@@ -20,28 +20,39 @@ Design rules (see SURVEY.md):
   rounding, sha2 surrogate ids) so results hash-match a DuckDB oracle.
 """
 
-from aeuc_vector_db_spark.functions.similarity import similarity_col
-from aeuc_vector_db_spark.operators.clustering import (
-    auto_cluster_phi,
-    centroids,
-    form_pglyphs,
-    inertia,
-    with_phi_band,
-)
-from aeuc_vector_db_spark.operators.search import (
-    knn_search,
-    knn_search_batch,
-    knn_search_batch_arrow,
-    search_pglyphs,
-    two_level_search,
-)
-from aeuc_vector_db_spark.schemas import (
-    IGLYPH_SCHEMA,
-    PGLYPH_SCHEMA,
-    VECTOR_ENTRY_SCHEMA,
-)
-from aeuc_vector_db_spark.session import get_spark
-from aeuc_vector_db_spark.vector_field import VectorField
+import importlib
+
+# name -> defining module. The names load on first access (PEP 562), so
+# importing a submodule, such as the Python-worker daemon
+# `aeuc_vector_db_spark.worker_daemon`, does not import NumPy, pandas,
+# pyarrow or pyspark.sql with it.
+_EXPORTS = {
+    "similarity_col": "functions.similarity",
+    "auto_cluster_phi": "operators.clustering",
+    "centroids": "operators.clustering",
+    "form_pglyphs": "operators.clustering",
+    "inertia": "operators.clustering",
+    "with_phi_band": "operators.clustering",
+    "knn_search": "operators.search",
+    "knn_search_batch": "operators.search",
+    "knn_search_batch_arrow": "operators.search",
+    "search_pglyphs": "operators.search",
+    "two_level_search": "operators.search",
+    "IGLYPH_SCHEMA": "schemas",
+    "PGLYPH_SCHEMA": "schemas",
+    "VECTOR_ENTRY_SCHEMA": "schemas",
+    "get_spark": "session",
+    "VectorField": "vector_field",
+}
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    globals()[name] = value
+    return value
+
 
 __version__ = "0.1.0"
 

@@ -24,6 +24,8 @@ signatures are reproducible outside Spark.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,6 +56,27 @@ def exact_dedup(
     )
 
 
+# The index the last MinHash pass persisted (at most one). Building the
+# next pass's index releases it, so the operators never hold more than
+# one pass's index blocks, with no wait for a JVM garbage collection.
+_last_index: DataFrame | None = None
+_last_index_lock = threading.Lock()
+
+
+def _pass_index(index: DataFrame) -> DataFrame:
+    """`index` persisted for one MinHash pass, so that every branch of the
+    pass's plan reads one kernel pass per doc. The previous pass's index
+    is released first (no Spark job). Releasing is safe: a frame of an
+    earlier pass that is collected again recomputes its index."""
+    global _last_index
+    with _last_index_lock:
+        # a stopped context took its blocks with it
+        if _last_index is not None and _last_index.sparkSession.sparkContext._jsc is not None:
+            _last_index.unpersist(blocking=True)
+        _last_index = index.persist()
+    return index
+
+
 def shingle_sets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -66,12 +89,13 @@ def shingle_sets(
     filter on `sh` does not re-run the kernel).
 
     Lazy: every action re-runs the kernel. The MinHash operators read
-    the sets through `minhash_doc_index` under a lazy local checkpoint
-    instead, so each action shingles a doc once. Measured on a 4-vCPU
-    host, a `minhash_near_dup` pass so checkpointed took 1.6–2.0 s over
-    2k docs and 4.0–5.6 s over 20k, against 3.1–3.5 s and 13.4–14.7 s
-    recomputing the kernel per branch, for ~0.5 KB of index blocks per
-    doc, freed with the pass's frames."""
+    the sets through `minhash_doc_index`, persisted per pass
+    (`_pass_index`), instead, so each action shingles a doc once.
+    Measured on a 4-vCPU host, a `minhash_near_dup` pass so stored
+    took 1.6–2.0 s over 2k docs and 4.0–5.6 s over 20k, against
+    3.1–3.5 s and 13.4–14.7 s recomputing the kernel per branch, for
+    ~0.4–0.5 KB of index blocks per doc, released when the next pass
+    builds its index."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     pairs = df.select(F.col(id_col), F.col(text_col))
@@ -135,7 +159,7 @@ def _candidates_from_sigs(
     Optimization round 16 examined and REVERTED a groupBy(band, vals) +
     collect_list + map-side pair-expansion form here. It existed to
     evaluate the upstream signature subtree once instead of twice; the
-    callers now hand in a lazily checkpointed index, so both join sides
+    callers now hand in a persisted index, so both join sides
     read the same stored blocks and that duplication is gone at its
     source. The self-join also keeps the candidate subtree streamed
     atop its exchanges (the aggregate form's small size estimate had
@@ -193,11 +217,10 @@ def minhash_candidates(
     Output: (a_id, b_id) with a_id < b_id, distinct. The join key is
     (band_index, band signature values) — a real bucketed plan: the
     corpus shuffles once on band keys, never crossJoins. The (id, sig)
-    index is checkpointed lazily, so both join sides read one kernel
-    pass per action.
+    index is persisted for the pass (`_pass_index`), so both join sides
+    read one kernel pass per action.
     """
-    sigs = minhash_doc_index(df, id_col, text_col, k, shingle_n).select(id_col, "sig")
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = _pass_index(minhash_doc_index(df, id_col, text_col, k, shingle_n).select(id_col, "sig"))
     return _candidates_from_sigs(sigs, id_col, k, band_size, max_band_size)
 
 
@@ -214,16 +237,16 @@ def minhash_near_dup(
     """Full MinHash-LSH near-dup: candidates → exact shingle-set Jaccard
     verify ≥ threshold. Returns (a_id, b_id, jaccard).
 
-    The (id, sig, sh) `minhash_doc_index` is built once and checkpointed
-    lazily: the band join reads its `sig`, the verify joins its `sh`,
-    and the shingle kernel runs once per doc per action. The blocks are
-    freed when the returned frame is garbage-collected. The candidate/verify core
+    The (id, sig, sh) `minhash_doc_index` is built once and persisted
+    for the pass: the band join reads its `sig`, the verify joins its
+    `sh`, and the shingle kernel runs once per doc per action. The
+    blocks are released when the next MinHash pass builds its index
+    (`_pass_index`). The candidate/verify core
     is the one `incremental_minhash_near_dup` runs; this is its case
     where every doc is new. max_band_size: see _candidates_from_sigs
     (hot-band cap for skewed corpora).
     """
-    index = minhash_doc_index(df, id_col, text_col, k, shingle_n)
-    index = index.localCheckpoint(eager=False)
+    index = _pass_index(minhash_doc_index(df, id_col, text_col, k, shingle_n))
     pairs = _candidates_from_sigs(index, id_col, k, band_size, max_band_size)
     return _verified(pairs, index, id_col, threshold)
 
@@ -282,11 +305,10 @@ def incremental_minhash_near_dup(
     match proves the incremental plan loses nothing. `max_band_size`
     caps hot bands with counts over index ∪ batch (same boilerplate
     guard as `_candidates_from_sigs`)."""
-    # checkpoint (lazy) so the batch is shingled ONCE per action — the
+    # persisted so the batch is shingled ONCE per action — the
     # plan references new_index from many branches (band rows, cap
     # counts, both verification sides)
-    new_index = minhash_doc_index(batch, id_col, text_col, k, shingle_n)
-    new_index = new_index.localCheckpoint(eager=False)
+    new_index = _pass_index(minhash_doc_index(batch, id_col, text_col, k, shingle_n))
     # re-ingest safety (round-12 ADVICE): a batch doc_id already present
     # in the index would otherwise union into duplicate (id, sig, sh)
     # rows and the verification joins would emit duplicate output pairs.
@@ -564,10 +586,9 @@ def incremental_minhash_near_dup_bucketed(
     (re-ingests since last compact), so its side of every join
     broadcasts."""
     spark = batch.sparkSession
-    # lazy checkpoint: ONE Arrow shingle pass over the batch per action
+    # persisted: ONE Arrow shingle pass over the batch per action
     # (see the flat path's matching note)
-    new_index = minhash_doc_index(batch, id_col, text_col, k, shingle_n)
-    new_index = new_index.localCheckpoint(eager=False)
+    new_index = _pass_index(minhash_doc_index(batch, id_col, text_col, k, shingle_n))
     batch_ids = batch.select(id_col).distinct()
     corpus_idx = index.select(id_col, "sig", "sh").join(
         F.broadcast(batch_ids), id_col, "left_anti"

@@ -1031,9 +1031,9 @@ def test_text_features_built_once(dirty_corpus, monkeypatch):
 
 
 def test_near_dup_index_blocks_are_freed(spark, dirty_corpus):
-    """Each pass checkpoints its index into the block manager; the
-    blocks go with the pass's frames, so 20 passes leave at most one
-    pass's index behind once both sides have collected garbage."""
+    """Each pass stores its index in the block manager and releases the
+    previous pass's, so 20 passes leave at most one pass's index behind,
+    also once both sides have collected garbage."""
     import gc
     import time
 
@@ -1059,3 +1059,29 @@ def test_near_dup_index_blocks_are_freed(spark, dirty_corpus):
             break
         time.sleep(0.5)
     assert len(left) <= 1, (len(peak), len(left))
+
+
+def test_minhash_passes_hold_one_index(spark, dirty_corpus):
+    """Three passes over one input hold at most one pass's index blocks,
+    with no garbage collection forced: building a pass's index releases
+    the previous pass's. A frame of a released pass still collects."""
+    _, df = dirty_corpus
+    sc = spark.sparkContext
+
+    def held():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return {i.id(): i.memSize() + i.diskSize() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = held()
+    first = D.minhash_near_dup(df, threshold=0.3)
+    want = sorted(first.collect())
+    one_pass = held()
+    new = {i: b for i, b in one_pass.items() if i not in before}
+    assert len(new) == 1 and sum(new.values()) > 0, new
+    for _ in range(2):
+        assert sorted(D.minhash_near_dup(df, threshold=0.3).collect()) == want
+    three_passes = held()
+    new = {i: b for i, b in three_passes.items() if i not in before}
+    assert len(new) == 1, new
+    assert sum(three_passes.values()) <= sum(one_pass.values())
+    assert sorted(first.collect()) == want
