@@ -14,17 +14,51 @@ against 12–25 ms with the daemon. Every Python UDF and
 MinHash shingle kernel) paid it. The daemon imports this package from
 the workers' `PYTHONPATH`, so the package's parent directory goes on
 `spark.executorEnv.PYTHONPATH`, which also lets engine UDFs unpickle in
-a session started from any working directory.
+a session started from any working directory. The daemon also freezes
+a worker's long-lived heap after a task that imported modules, so the
+collect pyspark runs after every task scans only what tasks allocated
+(see `worker_daemon`).
+
+Tasks talk to their Python workers over Unix domain sockets
+(`spark.python.unix.domain.socket.enabled`), not TCP loopback, which
+Spark opens without `TCP_NODELAY`. On a 4-vCPU host the freeze took a
+no-op task from 14–44 ms of worker CPU to 1–2 ms, the socket took its
+job's wall time a further 20–25 % down, and together they made an IVF
+batch search (4 Python-worker stages) 22 % faster. The sockets live in
+a private directory, made once per process with mode 0700 and removed
+at interpreter exit:
+- under Unix domain sockets the daemon skips the worker secret
+  handshake, so the directory's mode is what keeps other users off the
+  sockets, as the secret did over TCP;
+- it is made under `/tmp`, not in `java.io.tmpdir` (Spark's default):
+  the daemon appends `/.{uuid4}.sock`, and a deep temp directory
+  overflows the 107-byte `AF_UNIX` path limit, which fails every Python
+  task.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 # the directory holding this package: Python workers import it from there
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_socket_dir: str | None = None
+
+
+def _private_socket_dir() -> str:
+    """This process's directory for Python-worker sockets (mode 0700,
+    removed at exit); see the module docstring."""
+    global _socket_dir
+    if _socket_dir is None:
+        _socket_dir = tempfile.mkdtemp(prefix="aeuc-spark-sock-", dir="/tmp")
+        atexit.register(shutil.rmtree, _socket_dir, ignore_errors=True)
+    return _socket_dir
 
 
 def get_spark(
@@ -37,10 +71,10 @@ def get_spark(
 
     Defaults follow the local[32] test substrate; on a real cluster the
     caller overrides master/memory via spark-submit and only the SQL conf
-    below carries over. A caller's `spark.python.daemon.module` in
-    `extra_conf` replaces the engine's daemon; a caller's
-    `spark.executorEnv.PYTHONPATH` is kept, with the package's parent
-    directory appended.
+    below carries over. A caller's `spark.python.daemon.module` or
+    `spark.python.unix.domain.socket.*` in `extra_conf` replaces the
+    engine's value; a caller's `spark.executorEnv.PYTHONPATH` is kept,
+    with the package's parent directory appended.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cpus
@@ -93,6 +127,9 @@ def get_spark(
         .config("spark.python.daemon.module", "aeuc_vector_db_spark.worker_daemon")
     )
     conf = dict(extra_conf or {})
+    conf.setdefault("spark.python.unix.domain.socket.enabled", "true")
+    if "spark.python.unix.domain.socket.dir" not in conf:
+        conf["spark.python.unix.domain.socket.dir"] = _private_socket_dir()
     paths = [p for p in conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep) if p]
     if _PACKAGE_PARENT not in paths:
         paths.append(_PACKAGE_PARENT)

@@ -2,10 +2,14 @@
 cross-checked against an independent NumPy recomputation on fixture data.
 """
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from aeuc_vector_db_spark.functions.similarity import similarity_col
+from aeuc_vector_db_spark.functions.vector import as_double, lit_vector
 from aeuc_vector_db_spark.operators.search import (
     knn_search,
     knn_search_batch,
@@ -29,7 +33,31 @@ def _np_topk_cosine(ids, mat, q, k):
     return list(ids[order]), list(scores[order])
 
 
+def _normalised_optimized_plan(df):
+    """The optimised logical plan with expression ids and lambda
+    variable names' counters dropped."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"lambda (\w+?)_\d+", r"lambda \1", re.sub(r"#\d+", "#", plan))
+
+
 class TestKnnSearch:
+    @pytest.mark.parametrize("metric", ["cosine", "euclidean", "dot", "phi_weighted"])
+    def test_plan_and_rows_match_a_literal_built_score(self, spark, embeddings, corpus_np, metric):
+        """`knn_search` reuses one score expression over a projected query
+        column; the optimiser inlines the query, so the plan and the rows
+        are those of a score built around the query literal."""
+        _, mat, _ = corpus_np
+        q = list(map(float, mat[11]))
+        got = knn_search(embeddings, q, top_k=7, metric=metric)
+        score = similarity_col(as_double("embedding"), lit_vector(q), metric)
+        want = (
+            embeddings.select(F.col("vec_id"), score.alias("score"))
+            .orderBy(F.col("score").desc(), F.col("vec_id").asc())
+            .limit(7)
+        )
+        assert _normalised_optimized_plan(got) == _normalised_optimized_plan(want)
+        assert got.collect() == want.collect()
+
     def test_topk_cosine_matches_numpy(self, spark, embeddings, corpus_np):
         ids, mat, _ = corpus_np
         q = list(map(float, mat[7]))

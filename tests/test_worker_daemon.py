@@ -1,8 +1,13 @@
-"""The engine's Python-worker daemon (`worker_daemon`): its zip import
-cache skips re-reads of unchanged archives but still sees a zip that is
-shipped or rewritten, and engine UDFs run from any working directory."""
+"""The engine's Python-worker daemon (`worker_daemon`) and how the
+session reaches it: the zip import cache skips re-reads of unchanged
+archives but still sees a zip that is shipped or rewritten; the
+post-task collect scans only what tasks allocated yet still reclaims
+their cycles; tasks talk to workers over Unix domain sockets in a
+private directory that is gone when the session's process exits; and
+engine UDFs run from any working directory."""
 
 import os
+import stat
 import subprocess
 import sys
 import textwrap
@@ -11,11 +16,92 @@ import zipfile
 
 from conftest import REPO_ROOT
 
+TASKS = 8
+
+
+def _on_workers_that_ran(sc, first, then, rounds=4):
+    """Run `first` on TASKS tasks, then `then` on TASKS tasks, up to
+    `rounds` times; return what `then` gave in the worker processes
+    (matched by pid) that had already run `first`. Each task gets one
+    element of range(TASKS); `first` returns its pid, `then` (pid,
+    value)."""
+    ran_first, got = set(), []
+    for _ in range(rounds):
+        ran_first.update(sc.parallelize(range(TASKS), TASKS).map(first).collect())
+        got += [v for pid, v in sc.parallelize(range(TASKS), TASKS).map(then).collect()
+                if pid in ran_first]
+        if got:
+            break
+    return got
+
 
 def test_session_runs_the_engine_daemon(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.python.daemon.module") == "aeuc_vector_db_spark.worker_daemon"
     assert REPO_ROOT in conf.get("spark.executorEnv.PYTHONPATH").split(os.pathsep)
+
+
+def test_workers_use_a_private_unix_socket_dir(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    sock_dir = conf.get("spark.python.unix.domain.socket.dir")
+    assert os.path.isdir(sock_dir)
+    assert stat.S_IMODE(os.stat(sock_dir).st_mode) == 0o700
+    # the Python workers' daemon listens there
+    assert spark.sparkContext.parallelize(range(2), 2).map(lambda x: x * 2).collect() == [0, 2]
+    assert any(name.endswith(".sock") for name in os.listdir(sock_dir))
+
+
+def test_long_lived_heap_is_frozen_after_an_import_task(spark):
+    """After a task that imported pandas, a later task in the same worker
+    finds the worker's heap frozen: the collect after each task scans
+    only the few objects outside the frozen generation."""
+
+    def import_pandas(_):
+        import pandas  # noqa: F401
+
+        return os.getpid()
+
+    def heap(_):
+        import gc
+
+        return os.getpid(), (gc.get_freeze_count(), len(gc.get_objects()))
+
+    got = _on_workers_that_ran(spark.sparkContext, import_pandas, heap)
+    assert got
+    for frozen, unfrozen in got:
+        assert frozen > 0 and unfrozen < frozen, got
+
+
+def test_post_task_collect_still_reclaims_cycles(spark):
+    """A reference cycle a task leaves behind, in a task that also
+    imports a module (so a freeze follows the collect), is dead in the
+    next task of that worker."""
+    tag = uuid.uuid4().hex[:8]
+
+    def leave_a_cycle(_):
+        import types
+        import weakref
+
+        import pyspark
+
+        class Node:
+            pass
+
+        node = Node()
+        node.me = node
+        setattr(pyspark, f"_wd_cycle_{tag}", weakref.ref(node))
+        sys.modules[f"_wd_mod_{tag}_{os.getpid()}"] = types.ModuleType("wd")
+        return os.getpid()
+
+    def cycle_alive(_):
+        import pyspark
+
+        ref = getattr(pyspark, f"_wd_cycle_{tag}", None)
+        return os.getpid(), ref is not None and ref() is not None
+
+    got = _on_workers_that_ran(spark.sparkContext, leave_a_cycle, cycle_alive)
+    assert got and not any(got), got
 
 
 def test_shipped_zip_imports_and_a_rewrite_is_seen(spark, tmp_path):
@@ -134,3 +220,34 @@ def test_engine_udfs_run_outside_the_repo(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0 and out.stdout.strip().endswith("OK"), out.stderr[-3000:]
+
+
+def test_session_process_leaves_no_socket_dir(tmp_path):
+    """A process that ran a session, with an accumulator (whose server
+    also listens in the socket directory) and without `spark.stop()`,
+    leaves no socket directory behind once it exits."""
+    script = textwrap.dedent(f"""
+        import os
+        import sys
+        sys.path.insert(0, {REPO_ROOT!r})
+        from aeuc_vector_db_spark.session import get_spark
+
+        spark = get_spark(app_name="socket-dir", cpus=2, extra_conf={{
+            "spark.driver.memory": "1g",
+            "spark.ui.showConsoleProgress": "false",
+        }})
+        sc = spark.sparkContext
+        acc = sc.accumulator(0)
+        sc.parallelize(range(4), 2).foreach(lambda x: acc.add(x))
+        assert acc.value == 6, acc.value
+        sock_dir = sc.getConf().get("spark.python.unix.domain.socket.dir")
+        assert any(n.endswith(".sock") for n in os.listdir(sock_dir)), os.listdir(sock_dir)
+        print(sock_dir)
+    """)
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    sock_dir = out.stdout.strip().splitlines()[-1]
+    assert sock_dir.startswith("/") and not os.path.exists(sock_dir), sock_dir
